@@ -25,6 +25,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 from collections.abc import Callable, Sequence
 from dataclasses import dataclass, field
@@ -32,6 +33,7 @@ from graphlib import TopologicalSorter
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from taipei_bi_etl_spark.io import write_partitioned
 
@@ -52,13 +54,15 @@ class TaskContext:
     def read_dest(self) -> DataFrame | None:
         """This task's own existing destination (the incremental
         self-reference pattern), or None before first materialization.
-        An empty destination directory (an init bootstrap that found no
+        A directory without data entries (an init bootstrap that found no
         history writes zero partitions) counts as absent."""
         path = self.pipeline._table_path(self.task.name)
-        if not os.path.exists(path):
+        if not os.path.isdir(path) or all(
+            e.startswith(("_", ".")) for e in os.listdir(path)
+        ):
             return None
         try:
-            return self.spark.read.parquet(path)
+            return self.pipeline._read_table(self.spark, self.task.name)
         except Exception:
             return None
 
@@ -87,7 +91,6 @@ class RollingWipe(CleanupPolicy):
 
     def apply(self, ctx: "TaskContext", path: str) -> None:
         import datetime
-        import shutil
 
         if not os.path.exists(path):
             return
@@ -115,42 +118,40 @@ class DeleteByKeys(CleanupPolicy):
 
     Scale path (BigQuery scans the whole table for this DELETE): the
     victim keys join against the dest ONCE to find the affected
-    partitions, then ONLY those partitions are rewritten minus victims
-    via dynamic overwrite — partitions untouched by any victim are
-    never read or written."""
+    partitions and which of them keep any row, then ONLY those
+    partitions are rewritten minus victims via dynamic overwrite —
+    partitions untouched by any victim are never read or written."""
 
     key_col: str
     victims_fn: Callable[["TaskContext"], DataFrame]
 
     def apply(self, ctx: "TaskContext", path: str) -> None:
-        if not os.path.exists(path):
+        dest = ctx.read_dest()
+        if dest is None:
             return
         t = ctx.task
-        dest = ctx.spark.read.parquet(path)
         victims = self.victims_fn(ctx).select(self.key_col).distinct()
-        affected = (
-            # bounded: victim partition-key list (distinct partition values)
-            dest.join(F.broadcast(victims), self.key_col, "left_semi")
-            .select(t.partition_col)
-            .distinct()
+        # per partition: does it hold a victim row, and any other row?
+        victim = F.col("_victim").isNotNull()
+        parts = (
+            # bounded: victim key list
+            dest.join(
+                F.broadcast(victims.withColumn("_victim", F.lit(True))),
+                self.key_col, "left",
+            )
+            .groupBy(t.partition_col)
+            .agg(F.max(victim).alias("hit"), F.max(~victim).alias("kept"))
+            .filter("hit")
+            .collect()
         )
-        affected_vals = [r[0] for r in affected.collect()]
-        if not affected_vals:
+        if not parts:
             return
         keep = (
-            dest.filter(F.col(t.partition_col).isin(affected_vals))
-            # bounded: victim partition-key list
+            dest.filter(F.col(t.partition_col).isin([r[0] for r in parts]))
+            # bounded: victim key list
             .join(F.broadcast(victims), self.key_col, "left_anti")
         )
-        # rewrite only the affected partitions (dynamic overwrite);
-        # partitions that lost ALL rows need explicit removal since an
-        # empty frame writes nothing
-        import shutil
-
-        kept_vals = {
-            str(r[0])
-            for r in keep.select(t.partition_col).distinct().collect()
-        }
+        # rewrite only the affected partitions (dynamic overwrite).
         # `keep` lazily reads the very path being overwritten.  That is
         # safe ONLY under dynamic partition overwrite (commit replaces
         # matching partitions after the job has read its input); under
@@ -170,11 +171,12 @@ class DeleteByKeys(CleanupPolicy):
                 conf.unset(key)
             else:
                 conf.set(key, prev)
-        for v in affected_vals:
-            if str(v) not in kept_vals:
-                gone = os.path.join(path, f"{t.partition_col}={v}")
-                if os.path.exists(gone):
-                    shutil.rmtree(gone)
+        # partitions that lost ALL rows need explicit removal since an
+        # empty frame writes nothing
+        for r in parts:
+            gone = os.path.join(path, f"{t.partition_col}={r[0]}")
+            if not r["kept"] and os.path.exists(gone):
+                shutil.rmtree(gone)
 
 
 @dataclass
@@ -205,6 +207,7 @@ class Pipeline:
         self.order = list(ts.static_order())
         self.warehouse = warehouse
         self._views: dict[str, DataFrame] = {}
+        self._schemas: dict[str, StructType] = {}
 
     def _table_path(self, name: str) -> str:
         return os.path.join(self.warehouse, name)
@@ -213,7 +216,16 @@ class Pipeline:
         t = self.tasks[name]
         if t.kind == "view":
             return self._views[name]
-        return spark.read.parquet(self._table_path(name))
+        return self._read_table(spark, name)
+
+    def _read_table(self, spark: SparkSession, name: str) -> DataFrame:
+        """Scan of a materialized table.  A node's output schema is fixed,
+        so only the first read infers it (a Spark job per inference)."""
+        schema = self._schemas.get(name)
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        df = reader.parquet(self._table_path(name))
+        self._schemas[name] = df.schema
+        return df
 
     def run_day(self, spark: SparkSession, date: str) -> None:
         """Run the whole DAG for one execution date, idempotently: table

@@ -26,6 +26,8 @@ two CUSTOM cleanups as declarative policy — delete-by-client-subquery
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
@@ -236,33 +238,30 @@ def tracker_settings(pings: DataFrame, date: str, lo_date=None) -> DataFrame:
 
 def user_channels_from(settings: DataFrame, channels: DataFrame) -> DataFrame:
     """The 5-arm alt-key union join + IFNULL defaults + RANK()=1
-    dedup of sql/mango_user_channels.sql:23-137 (J1/U2 + W1)."""
+    dedup of sql/mango_user_channels.sql:23-137 (J1/U2 + W1).  The arms
+    are ONE left join against the dim keyed per alt token (a join
+    distributes over UNION ALL), so ``settings`` is aggregated once."""
     chan_cols = [
         "network_name", "network_token", "campaign_name",
         "campaign_token", "adgroup_name", "adgroup_token",
         "creative_name", "creative_token",
     ]
-    arms = []
-    for alt in ("network_token", "campaign_token", "adgroup_token", "creative_token"):
-        arms.append(
-            settings.join(
-                # bounded: channel lookup (handful of rows)
-                F.broadcast(channels),
-                settings["tracker_token"] == channels[alt],
-            ).select(
-                "client_id", "tracker_token", "install_referrer",
-                *chan_cols, "execution_date",
-            )
-        )
-    null_arm = settings.filter(F.col("tracker_token").isNull()).select(
-        "client_id", "tracker_token", "install_referrer",
-        *[F.lit(None).cast("string").alias(c) for c in chan_cols],
-        "execution_date",
+    alts = ("network_token", "campaign_token", "adgroup_token", "creative_token")
+    keyed = channels.select(
+        F.explode(F.array(*alts)).alias("alt_token"), *chan_cols
     )
-    unioned = arms[0]
-    for a in arms[1:]:
-        unioned = unioned.unionByName(a)
-    unioned = unioned.unionByName(null_arm)
+    unioned = (
+        # bounded: channel lookup (handful of rows x 4 alt tokens)
+        settings.join(
+            F.broadcast(keyed),
+            settings["tracker_token"] == keyed["alt_token"],
+            "left",
+        )
+        # inner-join arms keep matches; the NULL arm keeps NULL tokens
+        .filter(
+            F.col("alt_token").isNotNull() | F.col("tracker_token").isNull()
+        )
+    )
     defaults = unioned.select(
         "client_id", "tracker_token", "install_referrer",
         *[
@@ -324,25 +323,39 @@ def occurrence_from(fm: DataFrame) -> DataFrame:
 def cohort_user_occurrence_from(ufo: DataFrame, uc: DataFrame) -> DataFrame:
     """sql/mango_cohort_user_occurrence.sql: channel-measure arm
     (App-level occurrences ⟕ user_channels → cohort_level 'Network')
-    ∪ feature-measure arm."""
-    cols = [
-        "os", "country", "measure_type", "cohort_level", "cohort_name",
+    ∪ feature-measure arm, from ONE read of ``ufo``: an App row explodes
+    into its client's network names (one per ``uc`` row, ``[NULL]`` on a
+    miss) then its own name.  The array holds strings: exploding structs
+    trips nested-column pruning through Generate in the channel ROI
+    snapshot (INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND, PySpark 4.1)."""
+    networks = uc.groupBy("client_id").agg(
+        # array() wraps each name so collect_list keeps the NULLs
+        F.flatten(F.collect_list(F.array("network_name"))).alias("networks")
+    )
+    own = F.array("cohort_name")
+    names = F.when(
+        F.col("cohort_level") == "App",
+        F.concat(
+            F.coalesce("networks", F.array(F.lit(None).cast("string"))), own
+        ),
+    ).otherwise(own)
+    exploded = (
+        ufo.join(networks, "client_id", "left")
+        .withColumn("names", names)
+        .select("*", F.posexplode("names").alias("pos", "name"))
+    )
+    # every position before the row's own (last) name is a channel row
+    is_chan = F.col("pos") < F.size("names") - 1
+    return exploded.select(
+        "os", "country",
+        F.when(is_chan, "channel").otherwise(F.col("measure_type"))
+        .alias("measure_type"),
+        F.when(is_chan, "Network").otherwise(F.col("cohort_level"))
+        .alias("cohort_level"),
+        F.col("name").alias("cohort_name"),
         "client_id", "cohort_date", "occur_date",
         "occur_day", "occur_week", "occur_month",
-    ]
-    chan = (
-        ufo.filter(F.col("cohort_level") == "App")
-        .join(uc.select("client_id", "network_name"), "client_id", "left")
-        .select(
-            "os", "country",
-            F.lit("channel").alias("measure_type"),
-            F.lit("Network").alias("cohort_level"),
-            F.col("network_name").alias("cohort_name"),
-            "client_id", "cohort_date", "occur_date",
-            "occur_day", "occur_week", "occur_month",
-        )
     )
-    return chan.unionByName(ufo.select(*cols))
 
 
 def retained_pivot_from(occ: DataFrame, date: str, lo_filter: bool) -> DataFrame:
@@ -442,44 +455,51 @@ def _retained_aggs() -> list[Column]:
 
 def active_user_count_from(occ: DataFrame, date: str) -> DataFrame:
     """sql/mango_active_user_count.sql: per-cohort DAU for the
-    execution date ⟕ rolling WAU/MAU with new_* (occur_day=0)."""
+    execution date ⟕ rolling WAU/MAU with new_* (occur_day=0).
+
+    One exact pass: per (cohort, client) the window folds into activity
+    flags, then each count is the clients carrying its flag
+    (``count(client_id)`` skips a NULL client as COUNT DISTINCT does).
+    A cohort with a NULL key gets NULL WAU/MAU, as the reference's
+    DAU ⟕ WAU ⟕ MAU join misses on it."""
     as_of = F.lit(date).cast("date")
-    occ = occ.filter(
-        (F.col("occur_date") >= F.date_sub(as_of, 27))
-        & (F.col("occur_date") <= as_of)
-    ).select(
-        "os", "country", "measure_type", "cohort_level", "cohort_name",
-        "client_id",
-        F.when(F.col("occur_day") == 0, F.col("client_id")).alias(
-            "new_client_id"
-        ),
-        "occur_date",
-    )
+    today = F.col("occur_date") == as_of
+    week = F.col("occur_date") >= F.date_sub(as_of, 6)
+    new = F.col("occur_day") == 0
     keys = ["os", "country", "measure_type", "cohort_level", "cohort_name"]
-    dau = (
-        occ.filter(F.col("occur_date") == as_of)
-        .groupBy(*keys, "occur_date")
+    flags = (
+        occ.filter(
+            (F.col("occur_date") >= F.date_sub(as_of, 27))
+            & (F.col("occur_date") <= as_of)
+        )
+        .groupBy(*keys, "client_id")
         .agg(
-            F.countDistinct("new_client_id").alias("new_dau"),
-            F.countDistinct("client_id").alias("dau"),
+            F.max(today & new).alias("new_dau"),
+            F.max(today).alias("dau"),
+            F.max(week & new).alias("new_wau"),
+            F.max(week).alias("wau"),
+            F.max(new).alias("new_mau"),
         )
     )
-    wau = (
-        occ.filter(F.col("occur_date") >= F.date_sub(as_of, 6))
-        .groupBy(*keys)
-        .agg(
-            F.countDistinct("new_client_id").alias("new_wau"),
-            F.countDistinct("client_id").alias("wau"),
-        )
+
+    def clients(flag: str) -> Column:
+        return F.count(F.when(F.col(flag), F.col("client_id"))).alias(flag)
+
+    counts = flags.groupBy(*keys).agg(
+        F.max("dau").alias("active_today"),
+        *[clients(c) for c in ("new_dau", "dau", "new_wau", "wau", "new_mau")],
+        F.count("client_id").alias("mau"),
     )
-    mau = occ.groupBy(*keys).agg(
-        F.countDistinct("new_client_id").alias("new_mau"),
-        F.countDistinct("client_id").alias("mau"),
-    )
-    return (
-        dau.join(wau, keys, "left")
-        .join(mau, keys, "left")
-        .withColumn("day", F.col("occur_date"))
+    all_keys = reduce(lambda a, b: a & b, [F.col(k).isNotNull() for k in keys])
+    return counts.filter("active_today").select(
+        *keys,
+        as_of.alias("occur_date"),
+        "new_dau", "dau",
+        *[
+            F.when(all_keys, F.col(c)).alias(c)
+            for c in ("new_wau", "wau", "new_mau", "mau")
+        ],
+        as_of.alias("day"),
     )
 
 
@@ -903,22 +923,19 @@ def build_full_mango_pipeline(sf_dir: str, warehouse: str) -> Pipeline:
             ctx.src("mango_events"), ctx.date, lo_date=lo_date
         )
 
-    def _user_channels_from(settings: DataFrame, channels: DataFrame) -> DataFrame:
-        return user_channels_from(settings, channels)
-
     def user_channels(ctx: TaskContext) -> DataFrame:
         """mango_user_channels daily (sql/mango_user_channels.sql):
         today's tracker settings joined 5 ways against the dim.
         Cleanup = delete-by-client subquery
         (sql/cleanup_mango_user_channels.sql) as DeleteByKeys policy."""
-        return _user_channels_from(
+        return user_channels_from(
             _tracker_settings(ctx), ctx.src("mango_channel_mapping")
         )
 
     def user_channels_init(ctx: TaskContext) -> DataFrame:
         """init_mango_user_channels.sql: full history before the first
         daily run (settings aggregated since epoch)."""
-        return _user_channels_from(
+        return user_channels_from(
             _tracker_settings(ctx, lo_date="1970-01-01"),
             ctx.src("mango_channel_mapping"),
         )
@@ -1055,31 +1072,12 @@ def build_full_mango_pipeline(sf_dir: str, warehouse: str) -> Pipeline:
 
     def cohort_user_occurrence(ctx: TaskContext) -> DataFrame:
         """mango_cohort_user_occurrence view
-        (sql/mango_cohort_user_occurrence.sql): channel-measure arm
-        (App-level occurrences joined to user_channels, cohort_level
-        'Network') ∪ feature-measure arm."""
-        ufo = ctx.src("mango_user_feature_occurrence")
-        uc = ctx.src("mango_user_channels").select(
-            "client_id", "network_name"
+        (sql/mango_cohort_user_occurrence.sql) — see
+        :func:`cohort_user_occurrence_from`."""
+        return cohort_user_occurrence_from(
+            ctx.src("mango_user_feature_occurrence"),
+            ctx.src("mango_user_channels"),
         )
-        chan = (
-            ufo.filter(F.col("cohort_level") == "App")
-            .join(uc, "client_id", "left")
-            .select(
-                "os", "country",
-                F.lit("channel").alias("measure_type"),
-                F.lit("Network").alias("cohort_level"),
-                F.col("network_name").alias("cohort_name"),
-                "client_id", "cohort_date", "occur_date",
-                "occur_day", "occur_week", "occur_month",
-            )
-        )
-        feat = ufo.select(
-            "os", "country", "measure_type", "cohort_level", "cohort_name",
-            "client_id", "cohort_date", "occur_date",
-            "occur_day", "occur_week", "occur_month",
-        )
-        return chan.unionByName(feat)
 
     def cohort_retained_users(ctx: TaskContext) -> DataFrame:
         """mango_cohort_retained_users

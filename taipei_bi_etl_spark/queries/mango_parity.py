@@ -348,9 +348,9 @@ def mango_user_channels_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     RANK()=1 creative-token dedup, preserving the reference's
     keep-ties RANK (not ROW_NUMBER) semantics.
 
-    Scale: the dim side is broadcast in all four arms (tokens are
-    disjoint across levels so each settings row matches ≤1 arm); the
-    only shuffle is the per-client window, keyed on client_id."""
+    Scale: the arms are one broadcast join against the dim keyed per
+    alt token (tokens are disjoint across levels so each settings row
+    matches ≤1 arm); the only shuffle is the per-client window."""
     from taipei_bi_etl_spark.plans.mango_dag import (
         tracker_settings,
         user_channels_from,
@@ -521,15 +521,8 @@ def _occurrence_chain_cte() -> str:
     return f"{_full_fm_cte()},\n{_user_channels_cte()},\n{_OCCURRENCE_CTE_TEMPLATE}"
 
 
-def _spark_couo(
-    spark: SparkSession,
-    sf_dir: str,
-    fm: DataFrame | None = None,
-    uc: DataFrame | None = None,
-) -> DataFrame:
-    """Memoized like _spark_fm — ``fm``/``uc`` args exist for intra-
-    call sharing and always receive the canonical memoized frames (the
-    plan is identical either way; persist() does not change the plan)."""
+def _spark_couo(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Memoized like _spark_fm."""
 
     def build() -> DataFrame:
         from taipei_bi_etl_spark.plans.mango_dag import (
@@ -537,10 +530,10 @@ def _spark_couo(
             occurrence_from,
         )
 
-        f = _spark_fm(spark, sf_dir) if fm is None else fm
-        ufo = occurrence_from(f)
-        u = _spark_uc(spark, sf_dir) if uc is None else uc
-        return cohort_user_occurrence_from(ufo, u).withColumn(
+        ufo = occurrence_from(_spark_fm(spark, sf_dir))
+        return cohort_user_occurrence_from(
+            ufo, _spark_uc(spark, sf_dir)
+        ).withColumn(
             "cohort_name", F.coalesce("cohort_name", F.lit("(unattributed)"))
         )
 
@@ -601,8 +594,8 @@ def mango_active_user_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     new_* (occur_day=0) variants.
 
     Scale: the occurrence grid is the one corpus-sized shuffle (distinct
-    on the composite key); dau/wau/mau reuse its partitioning, and the
-    three COUNT DISTINCT frames join on bounded cohort keys."""
+    on the composite key); dau/wau/mau then come from one per-client
+    flag aggregate over it, with no multi-distinct Expand."""
     from taipei_bi_etl_spark.plans.mango_dag import active_user_count_from
 
     couo = _spark_couo(spark, sf_dir)
@@ -1024,13 +1017,8 @@ FROM rfe28
 """
 
 
-def _spark_rfe28(
-    spark: SparkSession,
-    sf_dir: str,
-    fm: DataFrame | None = None,
-    uc: DataFrame | None = None,
-) -> DataFrame:
-    """Memoized like _spark_fm — see _spark_couo's note on the args."""
+def _spark_rfe28(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Memoized like _spark_fm."""
 
     def build() -> DataFrame:
         from taipei_bi_etl_spark.plans.mango_dag import (
@@ -1043,7 +1031,7 @@ def _spark_rfe28(
             synthesize_full_pings,
         )
 
-        f = _spark_fm(spark, sf_dir) if fm is None else fm
+        f = _spark_fm(spark, sf_dir)
         fcd = (
             f.filter(
                 ~F.col("feature_name").isin("Others", "feature: others")
@@ -1068,8 +1056,9 @@ def _spark_rfe28(
         pings = synthesize_full_pings(spark, sf_dir).withColumn(
             "day", F.col("submission_date")
         )
-        u = _spark_uc(spark, sf_dir) if uc is None else uc
-        return rfe_28d_from(pings, partial, session, u, AS_OF)
+        return rfe_28d_from(
+            pings, partial, session, _spark_uc(spark, sf_dir), AS_OF
+        )
 
     return _frame_memo(spark, sf_dir, "rfe28", build)
 
@@ -1297,10 +1286,10 @@ def mango_feature_roi_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
         roi_from,
     )
 
-    fm = _spark_fm(spark, sf_dir, persisted=True)
-    uc = _spark_uc(spark, sf_dir)
-    couo = _spark_couo(spark, sf_dir, fm=fm, uc=uc)
-    rfe28 = _spark_rfe28(spark, sf_dir, fm=fm, uc=uc)
+    # persist the shared fm frame that couo and rfe28 both read
+    _spark_fm(spark, sf_dir, persisted=True)
+    couo = _spark_couo(spark, sf_dir)
+    rfe28 = _spark_rfe28(spark, sf_dir)
     retained = retained_pivot_from(couo, AS_OF, lo_filter=True)
     # snapshot AU: per-day dau over the 28d window; wau/mau pinned 0
     # (see docstring)
@@ -1369,10 +1358,10 @@ def mango_channel_roi_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
         roi_from,
     )
 
-    fm = _spark_fm(spark, sf_dir, persisted=True)
-    uc = _spark_uc(spark, sf_dir)
-    couo = _spark_couo(spark, sf_dir, fm=fm, uc=uc)
-    rfe28 = _spark_rfe28(spark, sf_dir, fm=fm, uc=uc).withColumn(
+    # persist the shared fm frame that couo and rfe28 both read
+    _spark_fm(spark, sf_dir, persisted=True)
+    couo = _spark_couo(spark, sf_dir)
+    rfe28 = _spark_rfe28(spark, sf_dir).withColumn(
         "network_name",
         F.coalesce("network_name", F.lit("(unattributed)")),
     )

@@ -86,6 +86,23 @@ def test_rerun_is_idempotent(spark, warehouse):
     assert before == after
 
 
+def test_table_rereads_reuse_the_inferred_schema(spark, warehouse):
+    """Only a table's first read infers its schema (a footer-reading
+    Spark job); later reads pass that schema back and launch no job."""
+    wh, pipe = warehouse
+    first = pipe._resolve(spark, "feature_cohort_date")
+    sc = spark.sparkContext
+    sc.setJobGroup("dag-reread", "table re-read")
+    try:
+        again = pipe._resolve(spark, "feature_cohort_date")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getJobIdsForGroup("dag-reread")) == []
+    assert again.schema == first.schema
+    assert again.count() == spark.read.parquet(f"{wh}/feature_cohort_date").count()
+
+
 def test_retained_users_window(spark, warehouse):
     wh, pipe = warehouse
     got = spark.read.parquet(f"{wh}/cohort_retained_users")

@@ -139,6 +139,63 @@ def test_active_user_count_dau_wau_mau_ordering(spark, warehouse):
     assert au.filter(F.col("new_dau") > F.col("dau")).count() == 0
 
 
+def _node_frame(spark, wh, name, date):
+    """A table node's output frame for one date, built over the
+    warehouse the way run_day builds it (views registered in order)."""
+    from taipei_bi_etl_spark.plans.dag import TaskContext
+
+    p = build_full_mango_pipeline(SF_DIR, wh)
+    for n in p.order:
+        t = p.tasks[n]
+        ctx = TaskContext(spark=spark, pipeline=p, date=date, task=t)
+        if n == name:
+            return t.fn(ctx)
+        if t.kind == "view":
+            p._views[n] = t.fn(ctx)
+    raise KeyError(name)
+
+
+def _executed_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_active_user_count_reads_occurrence_chain_once(spark, warehouse):
+    """DAU/WAU/MAU come from one pass over ONE copy of the occurrence
+    chain: the node's plan scans mango_events once and has no
+    multi-distinct Expand; neither does the snapshot sharing the
+    helper."""
+    from taipei_bi_etl_spark.queries import REGISTRY
+
+    df = _node_frame(spark, warehouse, "mango_active_user_count", DATES[-1])
+    key = "spark.sql.maxMetadataStringLength"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "10000")  # untruncated scan locations
+    try:
+        plan = _executed_plan(df)
+    finally:
+        spark.conf.set(key, prev)
+    events = os.path.join(warehouse, "mango_events") + "]"
+    assert plan.count(events) == 1, plan
+    assert "Expand" not in plan, plan
+    snap = REGISTRY["mango_active_user_snapshot"].fn(spark, SF_DIR)
+    assert "Expand" not in _executed_plan(snap)
+
+
+def test_user_channels_aggregates_settings_once(spark, warehouse):
+    """The four alt-key arms and the NULL-token arm share ONE tracker
+    settings aggregate: the node's plan scans mango_events once."""
+    df = _node_frame(spark, warehouse, "mango_user_channels", DATES[-1])
+    key = "spark.sql.maxMetadataStringLength"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "10000")  # untruncated scan locations
+    try:
+        plan = _executed_plan(df)
+    finally:
+        spark.conf.set(key, prev)
+    events = os.path.join(warehouse, "mango_events") + "]"
+    assert plan.count(events) == 1, plan
+
+
 def test_revenue_google_matches_direct_recompute(spark, warehouse):
     """payout = capped google volume × country rate, recomputed from
     the core synthesizer without the DAG machinery."""
