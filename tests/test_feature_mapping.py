@@ -336,21 +336,88 @@ def test_feature_mapping_matches_python_model(spark):
     assert n_nontrivial > 500, n_nontrivial
 
 
-def test_rule_checklist_is_exhaustive_both_directions():
-    """VERDICT r01 #6: every feature.push site in the reference JS
-    (131 sites) maps to a rule item emitting the same template, and no
-    repo rule item lacks a JS site — mechanical completeness, not
-    author-shared transcription."""
+def _checklist_tool():
     import sys
     from pathlib import Path
 
     sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "tools"))
-    from feature_rule_checklist import build_checklist
+    import feature_rule_checklist
 
-    rows, unmatched_js, unmatched_rules = build_checklist()
+    return feature_rule_checklist
+
+
+def test_rule_checklist_is_exhaustive_both_directions():
+    """VERDICT r01 #6: every feature.push site in the reference JS
+    (131 sites) maps to a rule item emitting the same template, and no
+    repo rule item lacks a JS site — mechanical completeness, not
+    author-shared transcription.  The sites come from the live JS when
+    the reference checkout is present, else from the committed
+    FEATURE_RULES.md list; where the live JS exists it must also equal
+    the committed list, so the list of record cannot go stale."""
+    from pathlib import Path
+
+    tool = _checklist_tool()
+    rows, unmatched_js, unmatched_rules = tool.build_checklist()
     assert len(rows) == 131
     assert unmatched_js == []
     assert unmatched_rules == []
+    if Path(tool.JS_PATH).exists():
+        assert tool.js_push_sites() == tool.committed_push_sites()
+
+
+def test_committed_site_list_loses_no_row(tmp_path):
+    """Deleting one site row from FEATURE_RULES.md is caught twice over:
+    the parser refuses a count that disagrees with the header, and with
+    the header edited to match, the orphaned rule item surfaces."""
+    import pytest
+
+    tool = _checklist_tool()
+    lines = tool.RULES_MD.read_text().split("\n")
+    cut = next(i for i, l in enumerate(lines) if "`feature: bookmark`" in l)
+    del lines[cut]
+    md = tmp_path / "FEATURE_RULES.md"
+    md.write_text("\n".join(lines))
+    with pytest.raises(ValueError, match="header records 131"):
+        tool.committed_push_sites(md)
+
+    md.write_text(
+        "\n".join(lines).replace("JS push sites: 131 ", "JS push sites: 130 ")
+    )
+    rows, unmatched_js, unmatched_rules = tool.build_checklist(
+        tool.committed_push_sites(md)
+    )
+    assert len(rows) == 130 and unmatched_js == []
+    assert [(v, t) for v, t, _ in unmatched_rules] == [
+        ("Browser", "feature: bookmark")
+    ]
+
+
+def test_rule_checklist_catches_a_changed_item_template(monkeypatch):
+    """A rule item whose template drifts from its push site leaves that
+    site and that item unmatched."""
+    import taipei_bi_etl_spark.feature_mapping as fm
+
+    tool = _checklist_tool()
+    inv = fm.rule_inventory()
+    vert, ridx, items = inv[5]
+    inv[5] = (vert, ridx, (items[0] + "_x",) + items[1:])
+    monkeypatch.setattr(fm, "rule_inventory", lambda: inv)
+    rows, unmatched_js, unmatched_rules = tool.build_checklist(
+        tool.committed_push_sites()
+    )
+    assert len(rows) == 130
+    assert [(v, t) for _, v, t in unmatched_js] == [(vert, items[0])]
+    assert [(v, t) for v, t, _ in unmatched_rules] == [(vert, items[0] + "_x")]
+
+
+def test_render_refuses_without_live_js(monkeypatch, tmp_path):
+    """FEATURE_RULES.md is never rebuilt from its own table."""
+    import pytest
+
+    tool = _checklist_tool()
+    monkeypatch.setattr(tool, "JS_PATH", str(tmp_path / "absent.sql"))
+    with pytest.raises(FileNotFoundError, match="never from its own"):
+        tool.render()
 
 
 def test_mapped_compile_equals_column_compile(spark):

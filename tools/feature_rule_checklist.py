@@ -6,6 +6,13 @@ same feature template in `taipei_bi_etl_spark/feature_mapping.py`
 both transcriptions share an author — this artifact makes completeness
 checkable line by line).
 
+The push sites are read from the live reference JS when its checkout
+is present.  Otherwise they are parsed from the JS-side columns (line,
+vertical, template) of FEATURE_RULES.md: the committed table is the
+push-site list of record when the reference checkout is absent.
+``--write`` regenerates FEATURE_RULES.md from the live JS only, never
+from its own table.
+
 Usage: python tools/feature_rule_checklist.py [--write]
 """
 
@@ -16,9 +23,11 @@ import sys
 from collections import defaultdict
 from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+REPO = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(REPO))
 
 JS_PATH = "/root/reference/udf_js/feature_mapping.sql"
+RULES_MD = REPO / "FEATURE_RULES.md"
 
 # JS function name → repo vertical name
 _JS_VERTICALS = (
@@ -31,6 +40,14 @@ _JS_VERTICALS = (
 
 _PUSH_RE = re.compile(r"feature\.push\((.+)\);")
 _CONCAT_RE = re.compile(r"\.concat\(([^)]*)\)")
+
+# FEATURE_RULES.md: header count, matched table rows, unmatched JS sites
+_MD_COUNT_RE = re.compile(r"^JS push sites: (\d+) ")
+_MD_ROW_RE = re.compile(
+    r"^\| udf_js/feature_mapping\.sql:(\d+) \| (\w+) \| `(.*)` \|"
+    r" [^|]* \| [^|]* \|$"
+)
+_MD_UNMATCHED_RE = re.compile(r"^- line (\d+): (\w+) `(.*)`$")
 
 
 def _js_template(expr: str) -> str:
@@ -74,8 +91,42 @@ def js_push_sites() -> list[tuple[int, str, str]]:
     return sites
 
 
-def build_checklist():
+def committed_push_sites(path: Path = RULES_MD) -> list[tuple[int, str, str]]:
+    """(line_no, vertical, template) for every push site recorded in
+    FEATURE_RULES.md: the matched table rows plus the UNMATCHED JS SITES
+    entries.  Only the JS-side columns are read; the rule/item columns
+    came from the program and are not trusted.  Raises ValueError unless
+    the number read equals the header's ``JS push sites: N``."""
+    expected, sites, section = None, [], None
+    for line in Path(path).read_text().split("\n"):
+        if line.startswith("## "):
+            section = line[3:].strip()
+        elif (m := _MD_COUNT_RE.match(line)) and expected is None:
+            expected = int(m.group(1))
+        elif section is None and (m := _MD_ROW_RE.match(line)):
+            sites.append((int(m.group(1)), m.group(2), m.group(3)))
+        elif section == "UNMATCHED JS SITES" and (
+            m := _MD_UNMATCHED_RE.match(line)
+        ):
+            sites.append((int(m.group(1)), m.group(2), m.group(3)))
+    if expected is None:
+        raise ValueError(f"{path}: no 'JS push sites: N' header line")
+    if len(sites) != expected:
+        raise ValueError(
+            f"{path}: header records {expected} JS push sites but "
+            f"{len(sites)} site lines were parsed"
+        )
+    return sorted(sites)
+
+
+def build_checklist(sites=None):
+    """Match push sites (default: the live JS when the reference checkout
+    is present, else the committed FEATURE_RULES.md list) to rule items."""
     from taipei_bi_etl_spark.feature_mapping import rule_inventory
+
+    if sites is None:
+        live = Path(JS_PATH).exists()
+        sites = js_push_sites() if live else committed_push_sites()
 
     inv = rule_inventory()
     # (vertical, template) → [(rule_idx, item_idx)]
@@ -86,7 +137,7 @@ def build_checklist():
 
     rows, unmatched_js = [], []
     used: dict[tuple[str, str], int] = defaultdict(int)
-    for lineno, vert, tmpl in js_push_sites():
+    for lineno, vert, tmpl in sites:
         slots = rule_slots.get((vert, tmpl), [])
         k = used[(vert, tmpl)]
         if k < len(slots):
@@ -104,7 +155,12 @@ def build_checklist():
 
 
 def render() -> str:
-    rows, unmatched_js, unmatched_rules = build_checklist()
+    if not Path(JS_PATH).exists():
+        raise FileNotFoundError(
+            f"{JS_PATH} is absent: FEATURE_RULES.md is regenerated only "
+            "from the live reference JS, never from its own committed table"
+        )
+    rows, unmatched_js, unmatched_rules = build_checklist(js_push_sites())
     out = [
         "# FEATURE_RULES — push-site ↔ rule checklist",
         "",
@@ -113,7 +169,8 @@ def render() -> str:
         "`feature.push` site in the reference's",
         "`udf_js/feature_mapping.sql` maps to the rule item emitting the",
         "same template; `tests/test_feature_mapping.py` asserts both",
-        "directions are exhaustive.",
+        "directions are exhaustive.  The committed table is the push-site",
+        "list of record when the reference checkout is absent.",
         "",
         f"JS push sites: {len(rows) + len(unmatched_js)} · "
         f"matched: {len(rows)} · unmatched JS: {len(unmatched_js)} · "
@@ -137,13 +194,15 @@ def render() -> str:
 
 
 if __name__ == "__main__":
-    text = render()
     if "--write" in sys.argv:
-        Path(__file__).resolve().parent.parent.joinpath(
-            "FEATURE_RULES.md"
-        ).write_text(text)
+        try:
+            RULES_MD.write_text(render())
+        except FileNotFoundError as e:
+            sys.exit(f"refusing --write: {e}")
         print("wrote FEATURE_RULES.md")
     rows, uj, ur = build_checklist()
+    source = JS_PATH if Path(JS_PATH).exists() else RULES_MD.name
+    print(f"sites from {source}")
     print(f"matched={len(rows)} unmatched_js={len(uj)} unmatched_rules={len(ur)}")
     for x in uj[:10]:
         print("JS-only:", x)
