@@ -350,10 +350,12 @@ def test_rule_checklist_is_exhaustive_both_directions():
     """VERDICT r01 #6: every feature.push site in the reference JS
     (131 sites) maps to a rule item emitting the same template, and no
     repo rule item lacks a JS site — mechanical completeness, not
-    author-shared transcription.  The sites come from the live JS when
-    the reference checkout is present, else from the committed
-    FEATURE_RULES.md list; where the live JS exists it must also equal
-    the committed list, so the list of record cannot go stale."""
+    author-shared transcription.  The sites are the committed
+    FEATURE_RULES.md list, generated from the reference JS; its table is
+    never hand-edited and changes only through ``--write`` with the live
+    JS.  Where the reference checkout is present the live extraction
+    must equal the committed list, so the list of record cannot go
+    stale."""
     from pathlib import Path
 
     tool = _checklist_tool()
@@ -363,6 +365,25 @@ def test_rule_checklist_is_exhaustive_both_directions():
     assert unmatched_rules == []
     if Path(tool.JS_PATH).exists():
         assert tool.js_push_sites() == tool.committed_push_sites()
+
+
+def test_committed_site_list_is_the_generated_one():
+    """The JS-side columns of FEATURE_RULES.md (line, vertical,
+    template) still equal the list generated from the reference JS, so a
+    hand edit that changes a template in both the table and
+    feature_mapping.py is caught without the reference checkout."""
+    import hashlib
+
+    tool = _checklist_tool()
+    sites = tool.committed_push_sites()
+    listing = "\n".join(f"{line}\t{vert}\t{tmpl}" for line, vert, tmpl in sites)
+    # sha256 of the site list parsed from FEATURE_RULES.md as generated
+    # from udf_js/feature_mapping.sql in commit 1c12bef; it comes from
+    # the reference, not from the program.  Update it only together with
+    # a `--write` run against the live reference JS.
+    assert hashlib.sha256(listing.encode()).hexdigest() == (
+        "16a0650289ce8a759cd2c214545c5d7bf3f23a83d1733c16cc4b1738c73a66c3"
+    )
 
 
 def test_committed_site_list_loses_no_row(tmp_path):

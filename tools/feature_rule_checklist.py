@@ -6,12 +6,13 @@ same feature template in `taipei_bi_etl_spark/feature_mapping.py`
 both transcriptions share an author — this artifact makes completeness
 checkable line by line).
 
-The push sites are read from the live reference JS when its checkout
-is present.  Otherwise they are parsed from the JS-side columns (line,
-vertical, template) of FEATURE_RULES.md: the committed table is the
-push-site list of record when the reference checkout is absent.
-``--write`` regenerates FEATURE_RULES.md from the live JS only, never
-from its own table.
+``build_checklist()`` matches the push sites parsed from the JS-side
+columns (line, vertical, template) of FEATURE_RULES.md against the
+rules: the committed table is the push-site list of record when the
+reference checkout is absent.  Where the checkout is present, the test
+suite asserts that the live extraction equals that list.  The table is
+never hand-edited: ``--write`` regenerates FEATURE_RULES.md from the
+live JS only, never from its own table.
 
 Usage: python tools/feature_rule_checklist.py [--write]
 """
@@ -120,14 +121,12 @@ def committed_push_sites(path: Path = RULES_MD) -> list[tuple[int, str, str]]:
 
 
 def build_checklist(sites=None):
-    """Match push sites (default: the live JS when the reference checkout
-    is present, else the committed FEATURE_RULES.md list) to rule items."""
+    """Match push sites (default: the committed FEATURE_RULES.md list) to
+    rule items."""
     from taipei_bi_etl_spark.feature_mapping import rule_inventory
 
     if sites is None:
-        live = Path(JS_PATH).exists()
-        sites = js_push_sites() if live else committed_push_sites()
-
+        sites = committed_push_sites()
     inv = rule_inventory()
     # (vertical, template) → [(rule_idx, item_idx)]
     rule_slots: dict[tuple[str, str], list[tuple[int, int]]] = defaultdict(list)
@@ -170,7 +169,9 @@ def render() -> str:
         "`udf_js/feature_mapping.sql` maps to the rule item emitting the",
         "same template; `tests/test_feature_mapping.py` asserts both",
         "directions are exhaustive.  The committed table is the push-site",
-        "list of record when the reference checkout is absent.",
+        "list of record when the reference checkout is absent.  Do not",
+        "hand-edit the table: it changes only through `--write` with the",
+        "live reference JS.",
         "",
         f"JS push sites: {len(rows) + len(unmatched_js)} · "
         f"matched: {len(rows)} · unmatched JS: {len(unmatched_js)} · "
@@ -201,8 +202,6 @@ if __name__ == "__main__":
             sys.exit(f"refusing --write: {e}")
         print("wrote FEATURE_RULES.md")
     rows, uj, ur = build_checklist()
-    source = JS_PATH if Path(JS_PATH).exists() else RULES_MD.name
-    print(f"sites from {source}")
     print(f"matched={len(rows)} unmatched_js={len(uj)} unmatched_rules={len(ur)}")
     for x in uj[:10]:
         print("JS-only:", x)
