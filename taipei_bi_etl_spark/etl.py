@@ -3,10 +3,10 @@ named task (or all of them in sequence) with step gating.
 
 Reference CLI: ``--task {rps,revenue,adjust,bigquery} --step {e,t,l}
 --date ... --dest ...``; no task → run all (``etl.py:36-40``).  Here the
-"bigquery" task family is the Pipeline DAG (``plans/mango_dag.py``) and
-the pandas tasks are the EtlTask subclasses — all driven through one
-``run_task`` function, importable or via ``python -m
-taipei_bi_etl_spark.etl``.
+"bigquery" task family is the 18-task daily DAG
+(``plans/mango_dag.py::build_full_mango_pipeline``) and the pandas tasks
+are the EtlTask subclasses — all driven through one ``run_task``
+function, importable or via ``python -m taipei_bi_etl_spark.etl``.
 """
 
 from __future__ import annotations
@@ -53,20 +53,12 @@ def run_task(
     return task.run(spark, dest_dir=dest_dir)
 
 
-def run_pipeline(
-    spark: SparkSession, sf_dir: str, warehouse: str, dates, full: bool = True
-):
-    """The daily DAG (reference entry point C, ``etl.py --task bigquery``).
+def run_pipeline(spark: SparkSession, sf_dir: str, warehouse: str, dates):
+    """The daily DAG (reference entry point C, ``etl.py --task bigquery``):
+    the 18-task reference-parity pipeline, run over ``dates`` in order."""
+    from taipei_bi_etl_spark.plans.mango_dag import build_full_mango_pipeline
 
-    ``full`` (default) runs the 18-task reference-parity pipeline;
-    ``full=False`` keeps the r01 condensed 6-task teaching DAG."""
-    from taipei_bi_etl_spark.plans.mango_dag import (
-        build_full_mango_pipeline,
-        build_mango_pipeline,
-    )
-
-    build = build_full_mango_pipeline if full else build_mango_pipeline
-    pipe = build(sf_dir, warehouse)
+    pipe = build_full_mango_pipeline(sf_dir, warehouse)
     pipe.run_range(spark, list(dates))
     return pipe
 
@@ -77,11 +69,6 @@ def main(argv=None) -> None:
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.001")
     ap.add_argument("--warehouse", default="./spark-warehouse/mango")
     ap.add_argument("--date", action="append", default=None)
-    ap.add_argument(
-        "--condensed",
-        action="store_true",
-        help="run the condensed 6-task DAG instead of the full 18-task one",
-    )
     args = ap.parse_args(argv)
 
     from taipei_bi_etl_spark.session import get_spark
@@ -89,10 +76,7 @@ def main(argv=None) -> None:
     spark = get_spark(app_name=f"etl-{args.task or 'pipeline'}")
     if args.task in (None, "pipeline"):
         dates = args.date or ["2024-01-30"]
-        run_pipeline(
-            spark, args.sf_dir, args.warehouse, dates,
-            full=not args.condensed,
-        )
+        run_pipeline(spark, args.sf_dir, args.warehouse, dates)
     else:
         run_task(spark, args.task)
 

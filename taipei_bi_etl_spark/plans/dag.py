@@ -189,9 +189,11 @@ class TaskSpec:
     kind: str = "table"  # "table" | "view"
     partition_col: str = "day"
     init_fn: Callable[[TaskContext], DataFrame] | None = None
+    # table writes cover [date - N, date] instead of the single
+    # execution date, N = window_days (the 112-day retained-users
+    # recompute) or else max(backfill_days) (the reference's backfill
+    # re-run of the trailing days)
     backfill_days: Sequence[int] = field(default_factory=tuple)
-    # table writes cover [date - window_days, date] instead of the
-    # single execution date (the 112-day retained-users recompute)
     window_days: int | None = None
     cleanup: CleanupPolicy | None = None
 
@@ -243,25 +245,17 @@ class Pipeline:
                     init_df, self._table_path(name), t.partition_col
                 )
             out = t.fn(ctx)
-            # restrict to the execution date plus the backfill/recompute
-            # window
-            if t.window_days is not None:
-                window = out.filter(
-                    F.col(t.partition_col).between(
-                        F.date_sub(F.lit(date), t.window_days), F.lit(date)
-                    )
-                )
-            elif t.backfill_days:
-                window = (
-                    out.filter(
-                        F.col(t.partition_col).between(
-                            F.date_sub(F.lit(date), max(t.backfill_days)),
-                            F.lit(date),
-                        )
-                    )
-                )
-            else:
-                window = out.filter(F.col(t.partition_col) == F.lit(date))
+            # restrict to the execution date, or to [date - span, date]
+            # for a recompute window / backfill re-run
+            span = t.window_days
+            if span is None:
+                span = max(t.backfill_days, default=None)
+            part, day = F.col(t.partition_col), F.lit(date)
+            window = out.filter(
+                part == day
+                if span is None
+                else part.between(F.date_sub(day, span), day)
+            )
             if t.cleanup is not None:
                 t.cleanup.apply(ctx, self._table_path(name))
             # run manifest: row count + partition bounds observed BY the

@@ -1,25 +1,22 @@
-"""The reference's daily telemetry DAG (§3.3) as Pipeline instances.
+"""The reference's daily telemetry DAG (§3.3) as one Pipeline.
 
-Two builds:
-
-* :func:`build_mango_pipeline` — the r01 condensed 6-task teaching DAG
-  (kept: its tests pin the TaskSpec machinery in isolation).
-* :func:`build_full_mango_pipeline` — NODE-FOR-NODE parity with the
-  reference's daily driver (`/root/reference/tasks/bigquery.py:416-461`,
-  18 `daily_run` tasks + the channel_roi config): core →
-  core_normalized → events → events_unnested → feature_mapping →
-  channel_mapping → user_channels → feature_cohort_date →
-  rfe_daily_partial → rfe_daily_session → rfe_28d →
-  user_feature_occurrence → cohort_user_occurrence →
-  cohort_retained_users → active_user_count → feature_roi →
-  channel_roi → revenue_google, each with the reference's write mode,
-  partition field, init query and cleanup policy
-  (`configs/bigquery.py:8-322`).
+:func:`build_full_mango_pipeline` is NODE-FOR-NODE parity with the
+reference's daily driver (`/root/reference/tasks/bigquery.py:416-461`,
+18 `daily_run` tasks + the channel_roi config): core →
+core_normalized → events → events_unnested → feature_mapping →
+channel_mapping → user_channels → feature_cohort_date →
+rfe_daily_partial → rfe_daily_session → rfe_28d →
+user_feature_occurrence → cohort_user_occurrence →
+cohort_retained_users → active_user_count → feature_roi →
+channel_roi → revenue_google, each with the reference's write mode,
+partition field, init query and cleanup policy
+(`configs/bigquery.py:8-322`).
 
 Covers the reference patterns K4/K7 (partitioned table + idempotent
-rewrite), K8 (backfill window), view chaining, the incremental
-self-reference with init bootstrap (§2.9 "incremental state"), and the
-two CUSTOM cleanups as declarative policy — delete-by-client-subquery
+rewrite), the trailing recompute window (112-day retained users),
+view chaining, the incremental self-reference with init bootstrap
+(§2.9 "incremental state"), and the two CUSTOM cleanups as
+declarative policy — delete-by-client-subquery
 (`sql/cleanup_mango_user_channels.sql`) and the 112-day rolling wipe
 (`sql/cleanup_mango_cohort_retained_users.sql`).
 """
@@ -41,135 +38,11 @@ from taipei_bi_etl_spark.plans.dag import (
 from taipei_bi_etl_spark.plans.telemetry_pipeline import (
     channel_mapping_table,
     google_rps_table,
-    map_features,
     map_features_full,
     synthesize_core_pings,
     synthesize_full_pings,
-    synthesize_pings,
-    unnest_events,
     unnest_events_full,
 )
-
-
-def build_mango_pipeline(sf_dir: str, warehouse: str) -> Pipeline:
-    def pings(ctx: TaskContext) -> DataFrame:
-        return synthesize_pings(ctx.spark, sf_dir).withColumn(
-            "day", F.col("submission_date")
-        )
-
-    def unnested(ctx: TaskContext) -> DataFrame:
-        return unnest_events(ctx.src("pings"))
-
-    def mapped(ctx: TaskContext) -> DataFrame:
-        return map_features(ctx.src("events_unnested"))
-
-    def usage_daily(ctx: TaskContext) -> DataFrame:
-        return (
-            ctx.src("feature_mapping")
-            .groupBy(
-                F.col("submission_date").alias("day"),
-                "feature_type",
-                "feature_name",
-            )
-            .agg(
-                F.count(F.lit(1)).alias("n_events"),
-                F.countDistinct("client_id").alias("n_clients"),
-            )
-        )
-
-    def cohort_new_rows(ctx: TaskContext) -> DataFrame:
-        """New (client, feature) cohort rows for the execution date:
-        anti-join against the task's own destination (J3 + read_dest)."""
-        todays = (
-            ctx.src("feature_mapping")
-            .filter(F.col("submission_date") == F.lit(ctx.date))
-            .select(
-                "client_id",
-                "feature_type",
-                "feature_name",
-                F.col("submission_date").alias("cohort_date"),
-            )
-            .groupBy("client_id", "feature_type", "feature_name")
-            .agg(F.min("cohort_date").alias("cohort_date"))
-            .withColumn("day", F.col("cohort_date"))
-        )
-        existing = ctx.read_dest()
-        if existing is None:
-            return todays
-        return todays.join(
-            existing.select("client_id", "feature_type", "feature_name"),
-            ["client_id", "feature_type", "feature_name"],
-            "left_anti",
-        )
-
-    def cohort_bootstrap(ctx: TaskContext) -> DataFrame:
-        """init query (sql/init_mango_feature_cohort_date.sql): full
-        history before the first daily run."""
-        return (
-            ctx.src("feature_mapping")
-            .filter(F.col("submission_date") < F.lit(ctx.date))
-            .groupBy("client_id", "feature_type", "feature_name")
-            .agg(F.min("submission_date").alias("cohort_date"))
-            .withColumn("day", F.col("cohort_date"))
-        )
-
-    def retained(ctx: TaskContext) -> DataFrame:
-        """Retention pivot (A5) re-derived from the cohort table."""
-        cohort = ctx.src("feature_cohort_date").select(
-            "client_id", "feature_type", "feature_name", "cohort_date"
-        )
-        activity = ctx.src("feature_mapping").select(
-            "client_id",
-            "feature_type",
-            "feature_name",
-            F.col("submission_date").alias("active_date"),
-        )
-        occ = cohort.join(
-            activity, ["client_id", "feature_type", "feature_name"]
-        ).withColumn(
-            "occur_day", F.datediff("active_date", "cohort_date")
-        )
-        aggs = [
-            F.countDistinct(
-                F.when(F.col("occur_day") == n, F.col("client_id"))
-            ).alias(f"d{n}_retained")
-            for n in (0, 1, 3, 7)
-        ]
-        return (
-            occ.groupBy(
-                F.col("cohort_date").alias("day"), "feature_type", "feature_name"
-            )
-            .agg(F.countDistinct("client_id").alias("cohort_size"), *aggs)
-        )
-
-    return Pipeline(
-        [
-            TaskSpec("pings", pings, kind="view"),
-            TaskSpec("events_unnested", unnested, deps=["pings"], kind="view"),
-            TaskSpec(
-                "feature_mapping", mapped, deps=["events_unnested"], kind="view"
-            ),
-            TaskSpec(
-                "feature_usage_daily",
-                usage_daily,
-                deps=["feature_mapping"],
-                backfill_days=(1, 2),
-            ),
-            TaskSpec(
-                "feature_cohort_date",
-                cohort_new_rows,
-                deps=["feature_mapping"],
-                init_fn=cohort_bootstrap,
-            ),
-            TaskSpec(
-                "cohort_retained_users",
-                retained,
-                deps=["feature_mapping", "feature_cohort_date"],
-                backfill_days=(1, 2, 3, 4, 5, 6, 7),
-            ),
-        ],
-        warehouse,
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -381,6 +381,9 @@ def _fit_centroids(spark: SparkSession, sf_dir: str) -> list[list[float]]:
 #: input expression, n, and the centroid VALUES (the trainer is eager
 #: and seeded; keying by value keeps the memo correct even if a refit
 #: ever produced different centers).  Expressions only — no data.
+#: Like every Column memo it holds unresolved expression trees, which
+#: are not tied to a session; by contrast ``mango_parity._FRAME_MEMO``
+#: holds session-bound frames and is keyed by ``applicationId``.
 _NEAREST_CELLS_MEMO: dict[tuple, Column] = {}
 
 

@@ -215,7 +215,7 @@ LSH_DIM = 64
 LSH_BUCKET_CAP = int(os.environ.get("SPARK_GRAFT_LSH_BUCKET_CAP", "5000"))
 
 
-def _bucket_splits(bucketed: DataFrame, id_col: str = "vec_id") -> DataFrame:
+def _bucket_splits(bucketed: DataFrame) -> DataFrame:
     """(table_id, bucket, nsplit) from an ids-only LSH index frame —
     bounded by construction at LSH_TABLES × 2^LSH_BITS rows, so it is
     always broadcastable regardless of corpus size."""

@@ -15,6 +15,7 @@ from taipei_bi_etl_spark.io import (
     latest_partition,
     overwrite_days,
     read_csv,
+    write_append_evolving,
     write_partitioned,
 )
 
@@ -63,6 +64,18 @@ def test_overwrite_days_backfill(spark, tmp_path):
         (str(r.utc_date), r.v) for r in spark.read.parquet(path).collect()
     )
     assert got == [("2024-01-01", 1), ("2024-01-02", 20), ("2024-01-03", 30)]
+
+
+def test_append_evolving_adds_a_column(spark, tmp_path):
+    """K4/K5 ALLOW_FIELD_ADDITION: an append may carry a new column;
+    a mergeSchema read shows it, NULL on the earlier rows."""
+    path = str(tmp_path / "t")
+    write_append_evolving(spark.createDataFrame([(1,)], "v int"), path)
+    write_append_evolving(
+        spark.createDataFrame([(2, "x")], "v int, tag string"), path
+    )
+    got = spark.read.option("mergeSchema", "true").parquet(path)
+    assert sorted((r.v, r.tag) for r in got.collect()) == [(1, None), (2, "x")]
 
 
 def test_read_csv_header_injection(spark, tmp_path):
