@@ -27,6 +27,8 @@ transcription of the JS in tests/test_feature_mapping.py.
 
 from __future__ import annotations
 
+from functools import cache
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -159,23 +161,18 @@ class _VocabCol(_AtomCol):
         return F.lit(True)
 
 
-_RULE_VOCAB: dict[str, list[str]] | None = None
-
-
-def _rule_vocab() -> dict[str, list[str]]:
+@cache
+def _rule_vocab() -> dict[str, tuple[str, ...]]:
     """Per-column sorted eq/isin literal vocabulary of the full rule-set
     (computed once by compiling the rules against recording proxies)."""
-    global _RULE_VOCAB
-    if _RULE_VOCAB is None:
-        vocab: dict = {}
-        reg: dict = {}
-        names = (
-            "event_method", "event_object", "event_value", "extra_key",
-            "extra_value", "event_vertical", "settings_search_engine",
-        )
-        _cascade_column(tuple(_VocabCol(c, reg, vocab) for c in names))
-        _RULE_VOCAB = {c: sorted(v) for c, v in vocab.items()}
-    return _RULE_VOCAB
+    vocab: dict = {}
+    reg: dict = {}
+    names = (
+        "event_method", "event_object", "event_value", "extra_key",
+        "extra_value", "event_vertical", "settings_search_engine",
+    )
+    _cascade_column(tuple(_VocabCol(c, reg, vocab) for c in names))
+    return {c: tuple(sorted(v)) for c, v in vocab.items()}
 
 
 class _DictAtomCol(_AtomCol):
@@ -867,10 +864,50 @@ def feature_mapping_staged(
     )
 
 
-#: Compiled-expression memo for :func:`feature_mapping_nolambda`,
-#: keyed by the input column-name binding.  Expressions only (immutable
-#: Column trees) — no data, no results, no DataFrames.
-_NOLAMBDA_MEMO: dict[tuple, tuple] = {}
+@cache
+def _nolambda_parts(binding: tuple[tuple[str, str], ...]) -> tuple:
+    """The compiled expressions of :func:`feature_mapping_nolambda` for
+    one (canonical name, column name) binding, cached: building the
+    131-rule cascade is ~4 s of driver-side py4j expression work, the
+    largest per-query constant of every mango-family query (Column
+    trees only, no data)."""
+    vocab = _rule_vocab()
+    reg: dict = {}
+    proxies = []
+    code_cols = []
+    for canonical, col_name in binding:
+        codes = {v: i for i, v in enumerate(vocab.get(canonical, []))}
+        if codes:
+            code_cols.append(
+                _encode_col(col_name, codes).alias(f"__fm_code_{col_name}")
+            )
+            proxies.append(_DictAtomCol(col_name, reg, codes))
+        else:
+            proxies.append(_AtomCol(col_name, reg))
+    vert_names = [f"__fm_v_{i}" for i in range(len(_VERTICALS))]
+    vert_cols = [
+        fn(_NoLambdaBackend, *proxies).alias(vn)
+        for vn, (_name, fn) in zip(vert_names, _VERTICALS)
+    ]
+    atom_names = [name for name, _ in reg.values()]
+    atom_cols = [expr.alias(name) for name, expr in reg.values()]
+    cascade = None
+    for vn, (label, _fn) in zip(vert_names, _VERTICALS):
+        cond = F.size(F.col(vn)) > 0
+        val = _pack(F.col(vn), label, "App")
+        cascade = (
+            F.when(cond, val)
+            if cascade is None
+            else cascade.when(cond, val)
+        )
+    mapped = cascade.otherwise(
+        _pack(F.array(F.lit("feature: others")), "Others", "Others")
+    )
+    code_names = [f"__fm_code_{c}" for _canonical, c in binding]
+    return (
+        tuple(code_cols), tuple(atom_cols), tuple(vert_cols), mapped,
+        tuple(vert_names), tuple(atom_names), tuple(code_names),
+    )
 
 
 def feature_mapping_nolambda(
@@ -894,17 +931,8 @@ def feature_mapping_nolambda(
     stages were).  Semantically identical to `feature_mapping_mapped`
     — gated by the randomized dual-transcription test.
 
-    r10 (optimization): the compiled expression battery is MEMOIZED
-    per column-name binding.  Building the 131-rule cascade is ~4 s of
-    driver-side Python/py4j expression construction (measured sf-free:
-    it is pure expression-tree work, no data), and every mango-family
-    query paid it on every invocation — the single largest per-query
-    constant in the suite.  Column objects are immutable expression
-    trees independent of any DataFrame or session state, so reusing
-    them across queries changes neither plans nor results (the dual-
-    transcription and oracle gates pin this).  NOTE this caches
-    COMPILED EXPRESSIONS only — never data, never results; each query
-    still computes from the parquet inputs every run."""
+    The compiled expressions come from :func:`_nolambda_parts`, cached
+    per column-name binding."""
     bound = {
         "event_method": event_method,
         "event_object": event_object,
@@ -914,51 +942,10 @@ def feature_mapping_nolambda(
         "event_vertical": event_vertical,
         "settings_search_engine": settings_search_engine,
     }
-    memo_key = tuple(bound.values())
-    parts = _NOLAMBDA_MEMO.get(memo_key)
-    if parts is None:
-        vocab = _rule_vocab()
-        reg: dict = {}
-        proxies = []
-        code_cols = []
-        for canonical, col_name in bound.items():
-            codes = {v: i for i, v in enumerate(vocab.get(canonical, []))}
-            if codes:
-                code_cols.append(
-                    _encode_col(col_name, codes).alias(f"__fm_code_{col_name}")
-                )
-                proxies.append(_DictAtomCol(col_name, reg, codes))
-            else:
-                proxies.append(_AtomCol(col_name, reg))
-        vert_names = [f"__fm_v_{i}" for i in range(len(_VERTICALS))]
-        vert_cols = [
-            fn(_NoLambdaBackend, *proxies).alias(vn)
-            for vn, (_name, fn) in zip(vert_names, _VERTICALS)
-        ]
-        atom_names = [name for name, _ in reg.values()]
-        atom_cols = [expr.alias(name) for name, expr in reg.values()]
-        cascade = None
-        for vn, (label, _fn) in zip(vert_names, _VERTICALS):
-            cond = F.size(F.col(vn)) > 0
-            val = _pack(F.col(vn), label, "App")
-            cascade = (
-                F.when(cond, val)
-                if cascade is None
-                else cascade.when(cond, val)
-            )
-        mapped = cascade.otherwise(
-            _pack(F.array(F.lit("feature: others")), "Others", "Others")
-        )
-        code_names = [f"__fm_code_{c}" for c in bound.values()]
-        parts = (
-            code_cols, atom_cols, vert_cols, mapped,
-            vert_names, atom_names, code_names,
-        )
-        _NOLAMBDA_MEMO[memo_key] = parts
     (
         code_cols, atom_cols, vert_cols, mapped,
         vert_names, atom_names, code_names,
-    ) = parts
+    ) = _nolambda_parts(tuple(bound.items()))
     with_codes = df.select("*", *code_cols)
     with_atoms = with_codes.select("*", *atom_cols)
     with_verts = with_atoms.select("*", *vert_cols)

@@ -89,11 +89,6 @@ def timestamp_trunc_day(ts: Column | str) -> Column:
     return F.date_trunc("day", ts)
 
 
-def to_utc_from_tz(ts: Column | str, tz: Column | str) -> Column:
-    """Timezone localize on ingest — S9, ``utils/marshalling.py:57-74``."""
-    return F.to_utc_timestamp(ts, tz)
-
-
 # ---------------------------------------------------------------------------
 # Null handling / casting (F13-F15, P10)
 # ---------------------------------------------------------------------------
@@ -147,12 +142,6 @@ def kv_clean(arr: Column | str) -> Column:
 # ---------------------------------------------------------------------------
 # Misc (F16-F18)
 # ---------------------------------------------------------------------------
-
-def floor_div(col: Column, n: int) -> Column:
-    """``FLOOR(x/n)`` week/month bucketing — F16,
-    ``sql/mango_user_feature_occurrence.sql:57-58``."""
-    return F.floor(col / n).cast("long")
-
 
 def gen_uuid() -> Column:
     """``GENERATE_UUID()`` — F17, ``sql/user_rfe.sql:5`` (non-deterministic;
@@ -405,12 +394,4 @@ def json_valid_strict_sql(s: str) -> str:
         f"AND NOT regexp_matches({strip}, '{_STRICT_TAIL_RE}') "
         f"AND NOT regexp_matches({strip}, '{_STRICT_TRAILING_COMMA_RE}') "
         f"AND len({keys}) = len(list_distinct({keys})))"
-    )
-
-
-def int_text_sql(s: str) -> str:
-    """DuckDB twin of :func:`int_text` over the SQL expression ``s``."""
-    return (
-        f"CASE WHEN regexp_matches({s}, '^\\s*-?[0-9]+\\s*$') "
-        f"THEN TRY_CAST({s} AS BIGINT) END"
     )

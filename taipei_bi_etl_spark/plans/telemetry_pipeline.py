@@ -16,6 +16,8 @@ the final rollup (parse/explode/mapping are all map-side).
 
 from __future__ import annotations
 
+from functools import cache
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -183,34 +185,20 @@ def synthesize_full_pings(spark: SparkSession, sf_dir: str) -> DataFrame:
     return full_pings_from(widen_scan(read_table(spark, sf_dir, "events")))
 
 
-#: Compiled-expression memo (r11, VERDICT r10 #3 — the established
-#: _NOLAMBDA_MEMO pattern): the full-ping synthesis battery (payload
-#: concat, settings array, os/country picks) references only the FIXED
-#: input column names (event_id, ts, user_id), so there is no binding
-#: variance and the memo needs no key.  Values are immutable Column
-#: trees — COMPILED EXPRESSIONS only, no data, no results, no
-#: DataFrames; every query still computes from the parquet inputs on
-#: every run.  Measured ~0.38 s of py4j construction per call, paid 3×
-#: per deep mango snapshot (fm + user_channels + rfe active-days) and
-#: once by every other mango-family query.
-_FULL_PINGS_EXPR_MEMO: list[F.Column] = []
-
-
 def full_pings_from(ev: DataFrame) -> DataFrame:
     """Frame form of :func:`synthesize_full_pings` — works on ANY
     events frame incl. a STREAMING one (every expression is stateless
     map-side, so the whole ping synthesis + unnest + mapping chain runs
     unchanged under Structured Streaming)."""
-    if not _FULL_PINGS_EXPR_MEMO:
-        exprs = _full_pings_exprs()
-        # build fully, publish with ONE mutation (r10 review rule: a
-        # partial publish under an interrupt would poison every later
-        # caller; the emptiness guard never rebuilds)
-        _FULL_PINGS_EXPR_MEMO.extend(exprs)
-    return ev.select(*_FULL_PINGS_EXPR_MEMO)
+    return ev.select(*_full_pings_exprs())
 
 
-def _full_pings_exprs() -> list[F.Column]:
+@cache
+def _full_pings_exprs() -> tuple[F.Column, ...]:
+    """The full-ping synthesis battery (payload concat, settings array,
+    os/country picks) over the fixed input columns event_id, ts and
+    user_id, cached: ~0.38 s of py4j construction per build, paid 3×
+    per deep mango snapshot and once by every other mango-family query."""
     # DECORRELATED picks: each field indexes a different "digit" of
     # event_id (divisor stride), so (method, object, value, …) span the
     # full product space — same-modulus picks would lock the pairs 1:1
@@ -279,7 +267,7 @@ def _full_pings_exprs() -> list[F.Column]:
         ),
         lambda s: s["value"].isNotNull(),
     )
-    return [
+    return (
         F.col("user_id").alias("client_id"),
         F.col("ts").alias("submission_timestamp"),
         F.to_date("ts").alias("submission_date"),
@@ -287,7 +275,7 @@ def _full_pings_exprs() -> list[F.Column]:
         country_of(F.col("user_id")).alias("country"),
         payload.alias("events_json"),
         settings.alias("settings"),
-    ]
+    )
 
 
 def structured_pings_from(ev: DataFrame) -> DataFrame:
@@ -303,17 +291,12 @@ def structured_pings_from(ev: DataFrame) -> DataFrame:
     `mango_feature_surface_native` hash-checks this path against the
     SAME oracle as the JSON path, so the two entries are proven
     row-identical."""
-    if not _STRUCTURED_PINGS_EXPR_MEMO:
-        _STRUCTURED_PINGS_EXPR_MEMO.extend(_structured_pings_exprs())
-    return ev.select(*_STRUCTURED_PINGS_EXPR_MEMO)
+    return ev.select(*_structured_pings_exprs())
 
 
-#: Same memo pattern as _FULL_PINGS_EXPR_MEMO (fixed input column
-#: names, expressions only).
-_STRUCTURED_PINGS_EXPR_MEMO: list[F.Column] = []
-
-
-def _structured_pings_exprs() -> list[F.Column]:
+@cache
+def _structured_pings_exprs() -> tuple[F.Column, ...]:
+    """Cached like :func:`_full_pings_exprs` (fixed input columns)."""
     def pick(vocab, salt: int, stride: int = 1) -> F.Column:
         arr = F.array(*[F.lit(x) for x in vocab])
         idx = F.floor(F.col("event_id") / stride) + salt
@@ -384,7 +367,7 @@ def _structured_pings_exprs() -> list[F.Column]:
         ),
         lambda s: s["value"].isNotNull(),
     )
-    return [
+    return (
         F.col("user_id").alias("client_id"),
         F.col("ts").alias("submission_timestamp"),
         F.to_date("ts").alias("submission_date"),
@@ -392,7 +375,7 @@ def _structured_pings_exprs() -> list[F.Column]:
         country_of(F.col("user_id")).alias("country"),
         F.array(event).alias("events"),
         settings.alias("settings"),
-    ]
+    )
 
 
 def unnest_events_structured(pings: DataFrame) -> DataFrame:

@@ -17,6 +17,8 @@ Scale notes:
 
 from __future__ import annotations
 
+from functools import cache
+
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -25,8 +27,10 @@ from taipei_bi_etl_spark.queries.dedup import JACCARD_T
 from taipei_bi_etl_spark.queries.similarity import (
     N_QUERIES,
     TOP_K,
+    _ColumnKey,
     _corpus_with_norm,
     cosine,
+    dot,
 )
 
 # ---------------------------------------------------------------------------
@@ -373,32 +377,26 @@ def _fit_centroids(spark: SparkSession, sf_dir: str) -> list[list[float]]:
     return [c.tolist() for c in model.clusterCenters()]
 
 
-#: Compiled-expression memo (r11, VERDICT r10 #6 — the _NOLAMBDA_MEMO
-#: pattern): the nearest-cells battery was N_CLUSTERS × EMB_DIM × 2 =
-#: 2048 per-scalar F.lit py4j calls PLUS an in-plan l2_norm fold of
-#: each CONSTANT centroid evaluated per row — measured ~2.5 s of
-#: construction per call, built twice per IVF query.  Keyed by the
-#: input expression, n, and the centroid VALUES (the trainer is eager
-#: and seeded; keying by value keeps the memo correct even if a refit
-#: ever produced different centers).  Expressions only — no data.
-#: Like every Column memo it holds unresolved expression trees, which
-#: are not tied to a session; by contrast ``mango_parity._FRAME_MEMO``
-#: holds session-bound frames and is keyed by ``applicationId``.
-_NEAREST_CELLS_MEMO: dict[tuple, Column] = {}
-
-
 def _nearest_cells(emb: Column, centroids: list[list[float]], n: int) -> Column:
     """Indices of the n centroids with highest cosine to emb (array)."""
+    return _nearest_cells_battery(
+        _ColumnKey(emb), n, tuple(tuple(c) for c in centroids)
+    )
+
+
+# The nearest-cells battery is N_CLUSTERS × EMB_DIM × 2 = 2048 per-scalar
+# F.lit py4j calls, ~2.5 s per build and built twice per IVF query, so
+# it is cached per (input expression, n, centroid values); keying by
+# value keeps it correct even if a refit produced different centers.
+# Column trees are not tied to a session, so unlike
+# ``mango_parity._FRAME_MEMO`` the key carries no applicationId.
+@cache
+def _nearest_cells_battery(
+    emb: _ColumnKey, n: int, centroids: tuple[tuple[float, ...], ...]
+) -> Column:
     import math
 
-    from taipei_bi_etl_spark.queries.similarity import _memo_key, dot
-
-    key = (_memo_key(emb), n, tuple(tuple(c) for c in centroids))
-    col = _NEAREST_CELLS_MEMO.get(key)
-    if col is not None:
-        return col
-
-    def py_norm(c: list[float]) -> float:
+    def py_norm(c: tuple[float, ...]) -> float:
         # identical float semantics to the in-plan l2_norm it replaces:
         # left-to-right double fold + IEEE sqrt (bit-equality verified
         # live and pinned in tests) — the centroid is a CONSTANT, so
@@ -411,7 +409,7 @@ def _nearest_cells(emb: Column, centroids: list[list[float]], n: int) -> Column:
     sims = F.array(
         *[
             F.struct(
-                (dot(emb, F.lit([float(v) for v in c])) / F.lit(py_norm(c)))
+                (dot(emb.col, F.lit([float(v) for v in c])) / F.lit(py_norm(c)))
                 .alias("sim"),
                 F.lit(i).alias("cell"),
             )
@@ -419,9 +417,7 @@ def _nearest_cells(emb: Column, centroids: list[list[float]], n: int) -> Column:
         ]
     )
     top = F.slice(F.reverse(F.array_sort(sims)), 1, n)
-    col = F.transform(top, lambda s: s["cell"])
-    _NEAREST_CELLS_MEMO[key] = col
-    return col
+    return F.transform(top, lambda s: s["cell"])
 
 
 @query("embedding_kmeans", oracle=None, tags=("similarity", "extension", "iterative"))

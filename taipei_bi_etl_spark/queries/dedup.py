@@ -25,7 +25,7 @@ with the guards off (the sf data has no degenerate keys — max df 25);
 
 from __future__ import annotations
 
-from functools import reduce
+from functools import cache, reduce
 from operator import add
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -215,67 +215,51 @@ def _signatures(docs_sh: DataFrame) -> DataFrame:
 
 _MERSENNE_P = (1 << 31) - 1
 
-#: Compiled-expression memos (r10 optimization, the similarity
-#: _SIG_MEMO pattern): the 64 permutation-min aggregates (~0.7 s of
-#: driver-side py4j construction) and the 16 band structs (~0.26 s)
-#: are constant expression trees over fixed column names, rebuilt on
-#: every minhash-family invocation.  Expressions only — no data, no
-#: results; every run still computes from the parquet inputs.
-_PERM_MIN_MEMO: list[Column] = []
-_BAND_STRUCT_MEMO: list[Column] = []
-
-
-def _perm_min_cols() -> list[Column]:
+# The permutation-min aggregates (~0.7 s of driver-side py4j
+# construction) and the band structs (~0.26 s) are constant expression
+# trees over fixed column names, built once and cached (Column trees
+# only, no data).
+@cache
+def _perm_min_cols() -> tuple[Column, ...]:
     """The N_PERM ``min(universal-hash-permutation)`` aggregate columns
-    over the exploded shingle-hash column ``h``, memoized."""
-    if not _PERM_MIN_MEMO:
-        import numpy as np
+    over the exploded shingle-hash column ``h``."""
+    import numpy as np
 
-        # Universal-hash permutations mod a Mersenne prime: (h*A_i +
-        # B_i) mod P actually permutes (a plain h*A+B is
-        # order-preserving and min() would always pick the same
-        # shingle).  Operands are bounded (h,A,B < P = 2^31-1) so
-        # products stay < 2^62 — no ANSI overflow.
-        P = _MERSENNE_P
-        rng = np.random.RandomState(7)
-        A = rng.randint(1, P, size=N_PERM).tolist()
-        B = rng.randint(0, P, size=N_PERM).tolist()
-        # build the full battery locally, then publish with ONE
-        # mutation: extending with a generator would leave a
-        # non-empty, incomplete memo if construction fails midway
-        # (interrupt / py4j hiccup), and the emptiness guard would
-        # then never rebuild it for the life of the process
-        cols = [
-            F.min(
-                F.pmod(F.col("h") * F.lit(int(A[i])) + F.lit(int(B[i])), F.lit(P))
-            ).alias(f"m{i}")
-            for i in range(N_PERM)
-        ]
-        _PERM_MIN_MEMO.extend(cols)
-    return _PERM_MIN_MEMO
+    # Universal-hash permutations mod a Mersenne prime: (h*A_i +
+    # B_i) mod P actually permutes (a plain h*A+B is
+    # order-preserving and min() would always pick the same
+    # shingle).  Operands are bounded (h,A,B < P = 2^31-1) so
+    # products stay < 2^62 — no ANSI overflow.
+    P = _MERSENNE_P
+    rng = np.random.RandomState(7)
+    A = rng.randint(1, P, size=N_PERM).tolist()
+    B = rng.randint(0, P, size=N_PERM).tolist()
+    return tuple(
+        F.min(
+            F.pmod(F.col("h") * F.lit(int(A[i])) + F.lit(int(B[i])), F.lit(P))
+        ).alias(f"m{i}")
+        for i in range(N_PERM)
+    )
 
 
+@cache
 def _band_structs() -> Column:
     """Array of (band_id, band_hash) structs over signature columns
-    (memoized — constant expression over the fixed m0..m63 names)."""
-    if not _BAND_STRUCT_MEMO:
-        _BAND_STRUCT_MEMO.append(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band_id"),
-                        F.xxhash64(
-                            *[
-                                F.col(f"m{b * ROWS_PER_BAND + r}")
-                                for r in range(ROWS_PER_BAND)
-                            ]
-                        ).alias("band_hash"),
-                    )
-                    for b in range(N_BANDS)
-                ]
+    (constant expression over the fixed m0..m63 names)."""
+    return F.array(
+        *[
+            F.struct(
+                F.lit(b).alias("band_id"),
+                F.xxhash64(
+                    *[
+                        F.col(f"m{b * ROWS_PER_BAND + r}")
+                        for r in range(ROWS_PER_BAND)
+                    ]
+                ).alias("band_hash"),
             )
-        )
-    return _BAND_STRUCT_MEMO[0]
+            for b in range(N_BANDS)
+        ]
+    )
 
 
 def minhash_lsh_pairs(
@@ -431,43 +415,38 @@ def simhash_fingerprints(docs_sh: DataFrame) -> DataFrame:
         poly_hash(chars, _SIMHASH_B1, _SIMHASH_P1).alias("h1"),
         poly_hash(chars, _SIMHASH_B2, _SIMHASH_P2).alias("h2"),
     )
-    # compiled-expression memo (r10, the _perm_min_cols pattern): the
-    # 60 vote aggregates + the 60-term fingerprint fold are ~1 s of
-    # driver-side py4j construction over FIXED column names, rebuilt on
-    # every simhash-family invocation.  Expressions only — no data.
-    if not _SIMHASH_EXPR_MEMO:
-        # build both batteries locally, publish with ONE mutation: two
-        # separate appends would leave a length-1 memo if the second
-        # build fails (interrupt / py4j hiccup) — the emptiness guard
-        # would then never rebuild, and every later simhash query
-        # would IndexError on the missing fold for the process's life
-        vote_aggs = [
-            F.sum(
-                F.shiftright(
-                    "h1" if i < _HALF_BITS else "h2",
-                    i if i < _HALF_BITS else i - _HALF_BITS,
-                ).bitwiseAND(F.lit(1))
-                * 2
-                - 1
-            ).alias(f"v{i}")
+    vote_aggs, fp_fold = _simhash_exprs()
+    votes = hashed.groupBy("doc_id").agg(*vote_aggs)
+    return votes.select("doc_id", fp_fold.alias("fp"))
+
+
+@cache
+def _simhash_exprs() -> tuple[tuple[Column, ...], Column]:
+    """The 60 vote aggregates and the 60-term fingerprint fold over
+    fixed column names, cached: ~1 s of driver-side py4j construction
+    per build."""
+    vote_aggs = tuple(
+        F.sum(
+            F.shiftright(
+                "h1" if i < _HALF_BITS else "h2",
+                i if i < _HALF_BITS else i - _HALF_BITS,
+            ).bitwiseAND(F.lit(1))
+            * 2
+            - 1
+        ).alias(f"v{i}")
+        for i in range(SIMHASH_BITS)
+    )
+    fp_fold = reduce(
+        add,
+        [
+            F.when(
+                F.col(f"v{i}") > 0,
+                F.shiftleft(F.lit(1).cast("long"), i),
+            ).otherwise(F.lit(0).cast("long"))
             for i in range(SIMHASH_BITS)
-        ]
-        fp_fold = reduce(
-            add,
-            [
-                F.when(
-                    F.col(f"v{i}") > 0,
-                    F.shiftleft(F.lit(1).cast("long"), i),
-                ).otherwise(F.lit(0).cast("long"))
-                for i in range(SIMHASH_BITS)
-            ],
-        )
-        _SIMHASH_EXPR_MEMO.extend([vote_aggs, fp_fold])
-    votes = hashed.groupBy("doc_id").agg(*_SIMHASH_EXPR_MEMO[0])
-    return votes.select("doc_id", _SIMHASH_EXPR_MEMO[1].alias("fp"))
-
-
-_SIMHASH_EXPR_MEMO: list = []
+        ],
+    )
+    return vote_aggs, fp_fold
 
 
 @query(

@@ -304,9 +304,8 @@ def knn_label_consistency_jl(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("label").isNotNull()
     )
     emb = as_double("embedding")
-    # compiled-expression memos (similarity._SIG_MEMO/_JL_MEMO): both
-    # batteries together were ~5 s of driver-side py4j construction
-    # paid on every invocation — expressions only, results unchanged
+    # both batteries are cached compiled expressions (~5 s of
+    # driver-side py4j construction together when built)
     proj = jl_projection_battery(emb)
     # the SMALL per-vector frame: 16-dim projection + its norm + the
     # LSH signatures — no 64-dim embedding.  Persisted because it feeds

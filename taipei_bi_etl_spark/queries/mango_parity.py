@@ -109,25 +109,20 @@ base AS (
 )"""
 
 
-#: Compiled-PLAN memo (r11, VERDICT r10 #3): the shared mango chain
-#: frames (feature-mapping surface, user_channels, occurrence grid,
-#: rfe_28d) are analyzed logical-plan trees rebuilt from scratch on
-#: EVERY snapshot invocation — measured 3–5 s of py4j round trips +
-#: catalyst re-analysis per deep snapshot, of which the tranche-4-style
-#: Column-battery memos recover only ~1 s (profiled: the residual is
-#: per-DataFrame-op analysis of the deep tree, ~900 ops/snapshot).
-#: This memoizes the FRAME — an immutable plan tree, the same object
-#: class as the Column memos one level up: NO data, NO results, NO
-#: cached rows.  Every action on the memoized frame still plans and
-#: executes from the parquet inputs (bench clearCache per pass drops
-#: any persisted blocks; oracle twins stay hash-exact; Spark's cache
-#: is plan-keyed, so the data-cache behavior is IDENTICAL to fresh
-#: construction — the CacheManager matched canonically-equal fresh
-#: plans before this memo existed).  Keyed by (applicationId, sf_dir,
-#: tag): a new session or data directory builds fresh.  The persisted
-#: variant re-registers its persist() per invocation when the registry
-#: release contract (queries/__init__) has unpersisted it, preserving
-#: the exact unpersist-on-next-invocation semantics.
+#: Compiled-PLAN memo for the shared mango chain frames (feature-mapping
+#: surface, user_channels, occurrence grid, rfe_28d): rebuilding them
+#: cost 3–5 s of py4j round trips + catalyst re-analysis per deep
+#: snapshot.  A memoized frame is an immutable plan tree (no data, no
+#: result rows): every action still plans and executes from the parquet
+#: inputs, and Spark's plan-keyed cache treats it exactly as a fresh
+#: construction.  This is the one memo that is a module table rather
+#: than a ``functools.cache`` builder, because a DataFrame belongs to
+#: its session: the key carries the ``applicationId`` so a new session
+#: (or data directory) builds fresh.  The Column builders elsewhere
+#: cache unresolved expression trees, which no session owns, so their
+#: keys carry no session.  The persisted variant re-registers its
+#: persist() per invocation when the registry release contract
+#: (queries/__init__) has unpersisted it.
 _FRAME_MEMO: dict[tuple[str, str, str], DataFrame] = {}
 
 

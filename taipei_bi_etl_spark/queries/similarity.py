@@ -23,6 +23,7 @@ values are safely oracle-hashable after ``ROUND(_, 6)``.
 from __future__ import annotations
 
 import os
+from functools import cache
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -278,21 +279,6 @@ def signature(emb: Column, planes: list[list[float]]) -> Column:
     return out.cast("long")
 
 
-#: Compiled-expression memos (r10 optimization, the feature_mapping
-#: _NOLAMBDA_MEMO pattern): the LSH signature battery is
-#: LSH_TABLES×LSH_BITS×LSH_DIM = 4096 literal nodes plus 64 fold
-#: lambdas — measured ~3 s of pure driver-side py4j expression
-#: construction per build; the JL projection battery is 1024 literals
-#: + 16 folds (~1.5 s).  Every invocation of the embedding-LSH / JL
-#: families paid that constant.  Keyed by the input column's
-#: expression string; values are immutable Column trees — COMPILED
-#: EXPRESSIONS only, no data, no results, no DataFrames: each query
-#: still computes from the parquet inputs on every run (hash-exact
-#: oracle gates pin identity).
-_SIG_MEMO: dict[str, Column] = {}
-_JL_MEMO: dict[str, Column] = {}
-
-
 def _memo_key(c: Column) -> str:
     """Expression-string memo key with LAMBDA VARIABLES normalized:
     Spark auto-numbers them per construction (``transform(embedding,
@@ -322,36 +308,55 @@ def _memo_key(c: Column) -> str:
     return s
 
 
+class _ColumnKey:
+    """Hashable cache key for a Column argument: equal when the
+    :func:`_memo_key` strings are equal.  Carries the Column the
+    builder compiles from (the first one seen under that key)."""
+
+    __slots__ = ("col", "key")
+
+    def __init__(self, col: Column | str):
+        self.col = F.col(col) if isinstance(col, str) else col
+        self.key = _memo_key(self.col)
+
+    def __hash__(self) -> int:
+        return hash(self.key)
+
+    def __eq__(self, other) -> bool:
+        return isinstance(other, _ColumnKey) and self.key == other.key
+
+
+# The LSH signature battery is LSH_TABLES×LSH_BITS×LSH_DIM = 4096
+# literal nodes plus 64 fold lambdas, ~3 s of driver-side py4j
+# construction per build; the JL projection battery is 1024 literals +
+# 16 folds, ~1.5 s.  Both are cached per input expression (Column
+# trees only, no data).
 def lsh_signature_battery(emb: Column | str = "emb") -> Column:
-    """``F.array`` of all LSH_TABLES table signatures for ``emb``,
-    memoized per input-expression string."""
-    c = F.col(emb) if isinstance(emb, str) else emb
-    key = _memo_key(c)
-    col = _SIG_MEMO.get(key)
-    if col is None:
-        planes = _hyperplanes()
-        col = F.array(
-            *[signature(c, planes[t]) for t in range(LSH_TABLES)]
-        )
-        _SIG_MEMO[key] = col
-    return col
+    """``F.array`` of all LSH_TABLES table signatures for ``emb``."""
+    return _lsh_signatures(_ColumnKey(emb))
+
+
+@cache
+def _lsh_signatures(emb: _ColumnKey) -> Column:
+    planes = _hyperplanes()
+    return F.array(
+        *[signature(emb.col, planes[t]) for t in range(LSH_TABLES)]
+    )
 
 
 def jl_projection_battery(emb: Column | str = "emb") -> Column:
-    """``F.array`` of the OUT_DIM JL sign-projection dots for ``emb``,
-    memoized per input-expression string."""
-    c = F.col(emb) if isinstance(emb, str) else emb
-    key = _memo_key(c)
-    col = _JL_MEMO.get(key)
-    if col is None:
-        col = F.array(
-            *[
-                dot(c, F.array(*[F.lit(float(s)) for s in row]))
-                for row in _jl_rows()
-            ]
-        )
-        _JL_MEMO[key] = col
-    return col
+    """``F.array`` of the OUT_DIM JL sign-projection dots for ``emb``."""
+    return _jl_projections(_ColumnKey(emb))
+
+
+@cache
+def _jl_projections(emb: _ColumnKey) -> Column:
+    return F.array(
+        *[
+            dot(emb.col, F.array(*[F.lit(float(s)) for s in row]))
+            for row in _jl_rows()
+        ]
+    )
 
 
 def _lsh_oracle() -> str:

@@ -1,23 +1,26 @@
-"""r11 (VERDICT r10 #3): compiled-expression and compiled-plan memos
-for the mango snapshot construction cost.
+"""Compiled-expression caches and compiled-plan memos.
 
-The deep snapshots spent 3–5 s of py4j round trips + catalyst
-re-analysis rebuilding the SAME shared chain frames on every
-invocation.  Two memo layers now remove that:
+The deep snapshots and the daily DAG spent seconds of py4j round trips
++ catalyst re-analysis rebuilding the SAME expressions and chain frames
+on every invocation.  Two layers remove that:
 
-1. Column-battery memos (the feature_mapping _NOLAMBDA_MEMO pattern) —
-   ping-synthesis expressions, the retained 22-agg pivot, ROI
-   percentile/retention/AU aggregates, the session sum battery.  All
-   reference FIXED column names, so the memos need no key.
+1. Cached builders (``functools.cache``) for every compiled-expression
+   battery: the ping syntheses, the mango aggregate batteries, the
+   dedup batteries, the rule vocabulary and the no-lambda cascade, and
+   the LSH / JL / nearest-cells batteries keyed by their input Column.
+   A builder that raises stores nothing, so the next call rebuilds the
+   whole battery.
 2. Frame memos (`mango_parity._FRAME_MEMO`) — the shared chain frames
    (fm / uc / couo / rfe28) keyed by (applicationId, sf_dir, tag).
    A DataFrame is an immutable analyzed PLAN tree: no data, no
    results — every action still plans and executes from parquet.
 
-These tests pin: same-object reuse, key separation by sf_dir, the
+These tests pin: same-object reuse, a rebuild after ``cache_clear()``
+with the same analyzed plan, rebuild after a failed build, cache hits
+on the daily DAG's event frames, key separation by sf_dir, the
 persisted frame's re-registration after a cache clear (the registry
 release contract unpersists it between queries), and plan equality of
-the memoized construction vs a fresh memo-bypassing one.
+the memoized construction vs a fresh one.
 """
 
 from __future__ import annotations
@@ -25,10 +28,29 @@ from __future__ import annotations
 import re
 
 import pytest
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
+from taipei_bi_etl_spark import feature_mapping as fm_mod
+from taipei_bi_etl_spark.plans import mango_dag as md
+from taipei_bi_etl_spark.plans import telemetry_pipeline as tp
+from taipei_bi_etl_spark.queries import clustering as cl
+from taipei_bi_etl_spark.queries import dedup as dd
+from taipei_bi_etl_spark.queries import similarity as S
 from tests.conftest import SF_DIR
 
 SF_DIR2 = "/root/testdata/sf0.01"
+
+#: every compiled-expression battery the mango chain frames are built from
+_MANGO_BUILDERS = (
+    tp._full_pings_exprs,
+    tp._structured_pings_exprs,
+    md._retained_aggs,
+    md._roi_pct_aggs,
+    md._roi_rr_aggs,
+    md._roi_au_aggs,
+    md._session_sum_aggs,
+)
 
 
 def _norm_plan(df) -> str:
@@ -38,19 +60,12 @@ def _norm_plan(df) -> str:
 
 
 def test_battery_memos_return_same_objects(spark):
-    from taipei_bi_etl_spark.plans import mango_dag as md
-    from taipei_bi_etl_spark.plans import telemetry_pipeline as tp
-
-    assert md._roi_au_aggs() is md._ROI_AU_AGG_MEMO
-    assert md._session_sum_aggs() is md._SESSION_SUM_MEMO
-    # list identity on repeat calls — no rebuild
+    assert md._roi_au_aggs() is md._roi_au_aggs()
     a1 = md._session_sum_aggs()
     a2 = md._session_sum_aggs()
     assert a1 is a2 and len(a1) == 5
-    # ping batteries fill on first frame build and are reused
-    tp_exprs_before = list(tp._FULL_PINGS_EXPR_MEMO)
-    if tp_exprs_before:
-        assert tp._FULL_PINGS_EXPR_MEMO[0] is tp._FULL_PINGS_EXPR_MEMO[0]
+    # the ping battery is reused by every frame build
+    assert tp._full_pings_exprs() is tp._full_pings_exprs()
 
 
 def test_frame_memo_same_object_and_key_separation(spark):
@@ -90,32 +105,16 @@ def test_frame_memo_plan_equals_fresh_construction(spark):
     """The memoized frame's analyzed plan must equal a fresh
     (memo-bypassing) construction's — the memo caches a plan tree only,
     never plan STATE (no persisted data, no result rows)."""
-    from taipei_bi_etl_spark.plans import mango_dag as md
-    from taipei_bi_etl_spark.plans import telemetry_pipeline as tp
     from taipei_bi_etl_spark.queries import mango_parity as mp
 
     memo_fm = mp._spark_fm(spark, SF_DIR)
     memo_couo = mp._spark_couo(spark, SF_DIR)
 
     saved_frames = dict(mp._FRAME_MEMO)
-    saved_batteries = {
-        "fp": list(tp._FULL_PINGS_EXPR_MEMO),
-        "sp": list(tp._STRUCTURED_PINGS_EXPR_MEMO),
-        "ret": list(md._RETAINED_AGG_MEMO),
-        "pct": list(md._ROI_PCT_AGG_MEMO),
-        "rr": list(md._ROI_RR_AGG_MEMO),
-        "au": list(md._ROI_AU_AGG_MEMO),
-        "ses": list(md._SESSION_SUM_MEMO),
-    }
     try:
         mp._FRAME_MEMO.clear()
-        tp._FULL_PINGS_EXPR_MEMO.clear()
-        tp._STRUCTURED_PINGS_EXPR_MEMO.clear()
-        md._RETAINED_AGG_MEMO.clear()
-        md._ROI_PCT_AGG_MEMO.clear()
-        md._ROI_RR_AGG_MEMO.clear()
-        md._ROI_AU_AGG_MEMO.clear()
-        md._SESSION_SUM_MEMO.clear()
+        for builder in _MANGO_BUILDERS:
+            builder.cache_clear()
         fresh_fm = mp._spark_fm(spark, SF_DIR)
         assert fresh_fm is not memo_fm
         assert _norm_plan(fresh_fm) == _norm_plan(memo_fm)
@@ -125,13 +124,6 @@ def test_frame_memo_plan_equals_fresh_construction(spark):
     finally:
         mp._FRAME_MEMO.clear()
         mp._FRAME_MEMO.update(saved_frames)
-        tp._FULL_PINGS_EXPR_MEMO[:] = saved_batteries["fp"]
-        tp._STRUCTURED_PINGS_EXPR_MEMO[:] = saved_batteries["sp"]
-        md._RETAINED_AGG_MEMO[:] = saved_batteries["ret"]
-        md._ROI_PCT_AGG_MEMO[:] = saved_batteries["pct"]
-        md._ROI_RR_AGG_MEMO[:] = saved_batteries["rr"]
-        md._ROI_AU_AGG_MEMO[:] = saved_batteries["au"]
-        md._SESSION_SUM_MEMO[:] = saved_batteries["ses"]
 
 
 def test_snapshot_results_identical_memo_vs_fresh(spark):
@@ -146,8 +138,186 @@ def test_snapshot_results_identical_memo_vs_fresh(spark):
     saved = dict(mp._FRAME_MEMO)
     try:
         mp._FRAME_MEMO.clear()
+        for builder in _MANGO_BUILDERS:
+            builder.cache_clear()
         fresh_rows = sorted(map(tuple, fn(spark, SF_DIR2).collect()))
     finally:
         mp._FRAME_MEMO.clear()
         mp._FRAME_MEMO.update(saved)
     assert memo_rows == fresh_rows and len(memo_rows) > 0
+
+
+# ---------------------------------------------------------------------------
+# Every cached builder: identity on repeat, same plan after a rebuild.
+# ---------------------------------------------------------------------------
+
+_RR_COLS = (
+    [f"d{n}_retained_users" for n in md._DAY_POINTS]
+    + [f"w{n}_retained_users" for n in md._WEEK_POINTS]
+    + [f"m{n}_retained_users" for n in md._MONTH_POINTS]
+    + ["daily_cohort_size", "weekly_cohort_size", "monthly_cohort_size"]
+)
+_FM_BINDING = tuple(
+    (c, c)
+    for c in (
+        "event_method", "event_object", "event_value", "extra_key",
+        "extra_value", "event_vertical", "settings_search_engine",
+    )
+)
+_CENTROIDS = ((1.0, 0.0, 0.0), (0.0, 1.0, 0.0), (0.0, 0.0, 1.0))
+
+
+def _ddl(cols, typ: str) -> str:
+    return ", ".join(f"{c} {typ}" for c in cols)
+
+
+def _agg(ddl: str):
+    return lambda spark, aggs: spark.createDataFrame([], ddl).agg(*aggs)
+
+
+def _select(ddl: str):
+    return lambda spark, cols: spark.createDataFrame([], ddl).select(*cols)
+
+
+def _select_one(ddl: str):
+    return lambda spark, col: spark.createDataFrame([], ddl).select(
+        col.alias("out")
+    )
+
+
+def _simhash(spark, exprs):
+    votes, fold = exprs
+    frame = spark.createDataFrame([], "h1 long, h2 long")
+    return frame.agg(*votes).select(fold.alias("fp"))
+
+
+def _nolambda(spark, parts):
+    code_cols, atom_cols, vert_cols, mapped = parts[:4]
+    frame = spark.createDataFrame(
+        [], _ddl((c for c, _ in _FM_BINDING), "string")
+    )
+    return (
+        frame.select("*", *code_cols)
+        .select("*", *atom_cols)
+        .select("*", *vert_cols)
+        .withColumn("map", mapped)
+    )
+
+
+_PINGS_DDL = "event_id long, ts timestamp, user_id long"
+_EMB_DDL = "emb array<double>"
+
+#: (builder, fresh-args factory, resolve(spark, output) → frame or value)
+_BUILDERS = [
+    (tp._full_pings_exprs, tuple, _select(_PINGS_DDL)),
+    (tp._structured_pings_exprs, tuple, _select(_PINGS_DDL)),
+    (md._retained_aggs, tuple, _agg(
+        "occur_day int, occur_week int, occur_month int, client_id long")),
+    (md._roi_pct_aggs, tuple, _agg(_ddl(md._RFE_METRICS, "double"))),
+    (md._roi_rr_aggs, tuple, _agg(_ddl(_RR_COLS, "long"))),
+    (md._roi_au_aggs, tuple, _agg(
+        "new_dau long, dau long, new_wau long, wau long, new_mau long, "
+        "mau long")),
+    (md._session_sum_aggs, tuple, _agg(_ddl(
+        ("session_time", "url_counts", "app_link_install", "app_link_open",
+         "show_keyboard"), "long"))),
+    (dd._perm_min_cols, tuple, _agg("h long")),
+    (dd._band_structs, tuple, _select_one(
+        _ddl((f"m{i}" for i in range(dd.N_PERM)), "long"))),
+    (dd._simhash_exprs, tuple, _simhash),
+    (fm_mod._rule_vocab, tuple, lambda spark, vocab: vocab),
+    (fm_mod._nolambda_parts, lambda: (_FM_BINDING,), _nolambda),
+    (S._lsh_signatures, lambda: (S._ColumnKey("emb"),), _select_one(_EMB_DDL)),
+    (S._jl_projections, lambda: (S._ColumnKey(F.col("emb")),),
+     _select_one(_EMB_DDL)),
+    (cl._nearest_cells_battery, lambda: (S._ColumnKey("emb"), 2, _CENTROIDS),
+     _select_one(_EMB_DDL)),
+]
+
+
+def _fingerprint(x):
+    return _norm_plan(x) if isinstance(x, DataFrame) else x
+
+
+@pytest.mark.parametrize(
+    "builder, args, resolve", _BUILDERS, ids=[b.__name__ for b, *_ in _BUILDERS]
+)
+def test_cached_builder_identity_and_rebuild_plan(spark, builder, args, resolve):
+    """A repeat call (with freshly made, equal arguments) returns the
+    identical object; after ``cache_clear()`` the rebuilt object is new
+    and resolves to the same exprId-normalized analyzed plan."""
+    first = builder(*args())
+    assert builder(*args()) is first
+    before = _fingerprint(resolve(spark, first))
+    builder.cache_clear()
+    rebuilt = builder(*args())
+    assert rebuilt is not first
+    assert builder(*args()) is rebuilt
+    assert _fingerprint(resolve(spark, rebuilt)) == before
+
+
+def test_builder_that_raises_midway_is_rebuilt_whole(spark, monkeypatch):
+    """A build that fails partway (an interrupt or a py4j hiccup) must
+    leave nothing cached: the next call returns the complete battery.
+    The hand-rolled list memos this replaced could keep a half-filled
+    battery for the life of the process."""
+    real_lit = F.lit
+    calls = {"n": 0}
+
+    def flaky_lit(*a, **kw):
+        calls["n"] += 1
+        if calls["n"] == 5:
+            raise RuntimeError("injected failure")
+        return real_lit(*a, **kw)
+
+    dd._band_structs.cache_clear()
+    monkeypatch.setattr(F, "lit", flaky_lit)
+    with pytest.raises(RuntimeError, match="injected failure"):
+        dd._band_structs()
+    assert dd._band_structs.cache_info().currsize == 0
+    bands = dd._band_structs()
+    assert calls["n"] > 5
+    monkeypatch.undo()
+    sig = spark.range(1).select(
+        *[F.lit(i).cast("long").alias(f"m{i}") for i in range(dd.N_PERM)]
+    )
+    row = sig.select(F.size(bands).alias("n")).first()
+    assert row.n == dd.N_BANDS
+    assert dd._band_structs() is bands
+
+
+def test_daily_dag_event_frames_hit_the_caches(spark, tmp_path, monkeypatch):
+    """Rebuilding the full DAG's ``mango_events`` and
+    ``mango_events_feature_mapping`` frames in one session adds no cache
+    miss to the full-pings battery or the no-lambda cascade: each rerun
+    of the daily DAG reuses the ~4 s cascade build."""
+    from taipei_bi_etl_spark.plans.dag import TaskContext
+
+    p = md.build_full_mango_pipeline(SF_DIR, str(tmp_path))
+    date = "2024-01-05"
+
+    def build():
+        def ctx(name):
+            return TaskContext(
+                spark=spark, pipeline=p, date=date, task=p.tasks[name]
+            )
+
+        events = p.tasks["mango_events"].fn(ctx("mango_events"))
+        # the events table's scan is the built frame (nothing is written)
+        monkeypatch.setattr(p, "_read_table", lambda _spark, _name: events)
+        p._views["mango_events_unnested"] = p.tasks["mango_events_unnested"].fn(
+            ctx("mango_events_unnested")
+        )
+        return p.tasks["mango_events_feature_mapping"].fn(
+            ctx("mango_events_feature_mapping")
+        )
+
+    builders = (tp._full_pings_exprs, fm_mod._nolambda_parts)
+    build()
+    before = [b.cache_info() for b in builders]
+    mapped = build()
+    after = [b.cache_info() for b in builders]
+    # no rebuild, and the second build did go through both caches
+    assert [i.misses for i in after] == [i.misses for i in before]
+    assert all(a.hits > b.hits for a, b in zip(after, before))
+    assert "feature_name" in mapped.columns

@@ -261,8 +261,8 @@ def test_deterministic_ivf_invariant_under_partition_layout(spark):
 def test_compiled_battery_memos_reuse_expressions(spark):
     """r10 optimization: the LSH signature / JL projection batteries
     are ~3 s / ~1.5 s of driver-side py4j expression construction —
-    memoized per input-expression string (the feature_mapping
-    _NOLAMBDA_MEMO pattern).  The memo must (a) hand back the SAME
+    cached per input-expression string (``functools.cache`` keyed by
+    ``_ColumnKey``).  The cache must (a) hand back the SAME
     immutable Column tree on repeat calls and (b) leave the resolved
     plan identical to a fresh (memo-bypassing) construction — i.e. it
     caches expressions only, never data or plan state."""

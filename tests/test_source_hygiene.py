@@ -29,3 +29,34 @@ def test_no_compile_warnings_anywhere():
             for w in caught
         )
     assert bad == []
+
+
+def test_one_memo_idiom():
+    """Compiled-expression memos are ``functools.cache`` builders; the
+    only module-level memo table is ``mango_parity._FRAME_MEMO``, whose
+    frames are keyed by the session that owns them."""
+    import ast
+
+    bad: list[tuple[str, str]] = []
+    for p in sorted((REPO / "taipei_bi_etl_spark").rglob("*.py")):
+        tree = ast.parse(p.read_text(), str(p))
+        targets = [
+            t
+            for node in tree.body
+            if isinstance(node, ast.Assign)
+            for t in node.targets
+        ] + [node.target for node in tree.body if isinstance(node, ast.AnnAssign)]
+        names = [t.id for t in targets if isinstance(t, ast.Name)]
+        names += [
+            n
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Global)
+            for n in node.names
+        ]
+        bad.extend(
+            (str(p.relative_to(REPO)), n)
+            for n in names
+            if n == "_RULE_VOCAB"
+            or (n.endswith("_MEMO") and n != "_FRAME_MEMO")
+        )
+    assert bad == []

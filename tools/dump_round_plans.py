@@ -1,11 +1,19 @@
 #!/usr/bin/env python
 """Dump `.explain("formatted")` for queries into
-plans/r11/<query>_<tag>.txt (tag = before|after), the r11
-optimization-round evidence files.
+plans/<round>/<query>_<tag>.txt (tag = before|after), an
+optimization round's evidence files.
 
-Usage: python tools/r11_dump_plans.py before|after [query ...]
-(default: the whole bench.HEADLINE set; sf0.01 so construction probes
-stay cheap — plan SHAPE is scale-free).
+Usage: python tools/dump_round_plans.py <round> before|after [query ...]
+(e.g. ``r11 after``; default queries: the whole bench.HEADLINE set;
+sf0.01 so construction probes stay cheap — plan SHAPE is scale-free).
+
+Executed plans are not stable for every query: the plan string of the
+22-``countDistinct`` retention pivot (the DAG's
+``mango_cohort_retained_users`` node, ``mango_retained_users_snapshot``)
+differs between two runs of the same code, because Spark's
+distinct-aggregate rewrite numbers its Expand groups in a
+hash-dependent order.  Compare analyzed plans for that pivot, or
+normalize the Expand group order, before diffing two dumps.
 """
 from __future__ import annotations
 
@@ -20,15 +28,17 @@ SF_DIR = "/root/testdata/sf0.01"
 
 
 def main() -> None:
-    tag = sys.argv[1] if len(sys.argv) > 1 else "before"
+    if len(sys.argv) < 3 or sys.argv[2] not in ("before", "after"):
+        sys.exit(__doc__)
+    rnd, tag = sys.argv[1], sys.argv[2]
     from bench import HEADLINE
     from taipei_bi_etl_spark.queries import REGISTRY, release_tracked
     from taipei_bi_etl_spark.session import get_spark
 
-    names = sys.argv[2:] or HEADLINE
-    out_dir = Path(_REPO) / "plans" / "r11"
+    names = sys.argv[3:] or HEADLINE
+    out_dir = Path(_REPO) / "plans" / rnd
     out_dir.mkdir(parents=True, exist_ok=True)
-    spark = get_spark(app_name="r11_plans")
+    spark = get_spark(app_name=f"{rnd}_plans")
     for name in names:
         spec = REGISTRY.get(name)
         if spec is None:
